@@ -29,163 +29,194 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver caps its oracle pass at 50 queries per round (observed in r2;
-# see docs/PLANS.md "Driver 50-query cap"), so we rotate: the r13 head is
-# (1) the 13 queries whose driver evidence is age 5 after r12 — the eight
-# r08-cohort names VERDICT r12 #3 requires to LEAD this head plus the five
-# rotated out in r12 session 1 (tests/test_local_correctness.py enforces
-# the <= 4 hard bound), (2) this round's modified-query REPRESENTATIVES
-# (_ROUND_MODIFIED — the r12 precedent: one head slot per rewritten
-# kernel family; EVERY touched query is hash-checked in the committed
-# full-registry LOCAL_CORRECTNESS artifact), and (3) the stalest age-4
-# queries filling the cap to exactly 50.
+# see docs/PLANS.md "Driver 50-query cap"), so we rotate. The r14 head is
+# (1) the 22 queries last driver-green in r09, whose evidence would reach
+# age 5 in r14 (tests/test_local_correctness.py enforces the <= 4 bound),
+# then (2) the stalest r10-green queries filling the cap to exactly 50.
+# Every r13-modified query was driver-green in CORRECTNESS_r13.json.
 _DRIVER_PRIORITY = [
-    # --- age-5 cohort (last driver-green r08): MUST lead the r13 head
-    "blog_union_minjoin",
-    "children_counts",
-    "cross_source_dup_matrix",
-    "dedup_cluster_stats",
-    "dedup_clusters",
-    "dedup_exact",
-    "embedding_outliers",
-    "hard_negatives",
-    "leakage_free_split",
-    "mixture_weights",
-    "quantile_error_audit",
-    "substring_dup_spans",
-    "top_boilerplate_spans",
-    # --- stalest age-4 fill (last driver-green r09)
-    "decontaminate",
-    "dedup_exact_keep_first",
-    "discussions_by_created",
-]
-# multi-round-green AND untouched this round — rotated past the 50-slot
-# cap (regenerated each round so head + this = registry). Every one
-# stays hash-checked locally each round (tests/test_driver_queries.py)
-# and in the committed LOCAL_CORRECTNESS artifact (local_correctness.py).
-# Disjoint from _DRIVER_PRIORITY and _ROUND_MODIFIED by construction
-# (ADVICE r11 #3); test_rotation_lists_are_disjoint pins it.
-_DRIVER_ROTATE_LAST = [
-    "above_nation_avg_balance",
-    "account_history_page",
-    "adaptive_maintenance_audit",
-    "ann_ivf_kmeans_topk",
-    "ann_ivf_nprobe_topk",
-    "ann_ivfpq_trained_topk",
-    "ann_pq_topk",
-    "asof_purchase_attribution",
-    "authorperm_codec",
-    "balanced_sample",
-    "bigram_perplexity",
-    "bm25_search",
-    "build_vocab",
-    "chunk_dedup",
-    "chunk_documents",
-    "chunk_excise",
-    "clustered_adaptive_ivfpq_topk",
-    "clustered_adaptive_merge_audit",
-    "clustered_adaptive_occupancy_audit",
-    "clustered_adaptive_semdedup_audit",
-    "clustered_adaptive_semdedup_w2_audit",
-    "clustered_adaptive_semdedup_w2k16_audit",
-    "clustered_adaptive_topk_p1",
-    "clustered_adaptive_topk_p2",
-    "clustered_ivf_occupancy_audit",
-    "clustered_ivfpq_residual_recall_audit",
-    "clustered_ivfpq_trained_topk",
-    "clustered_kmeans_agreement_audit",
-    "clustered_mass_occupancy_audit",
-    "clustered_mass_semdedup_audit",
-    "corpus_datasheet",
-    "curated_corpus",
-    "curriculum_buckets",
-    "daily_moving_avg",
-    "dedup_best_representative",
-    "dedup_embedding_lsh",
-    "dedup_embedding_lsh_flips1",
-    "dedup_embedding_lsh_flips3",
-    "dedup_embedding_lsh_multiprobe",
-    "dedup_embedding_lsh_single_probe",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "deterministic_shuffle",
+    # --- last driver-green r09: MUST lead the r14 head
     "discussions_by_hot",
     "discussions_by_payout_keyset",
-    "discussions_by_promoted",
     "discussions_by_trending",
-    "doc_novelty",
-    "dup_inflation",
-    "earliest_event_per_user",
-    "embedding_kmeans",
-    "embedding_lsh_flips1_recall_audit",
-    "embedding_lsh_multiprobe_recall_audit",
-    "embedding_lsh_planted_recall_audit",
-    "embedding_lsh_recall_audit",
-    "event_funnel",
-    "events_pivot",
-    "feed_semijoin",
-    "follow_counts",
-    "hll_daily_merge",
-    "hll_distinct",
-    "hourly_hll_distinct",
-    "ivfpq_residual_recall_audit",
-    "ivfpq_trained_recall_audit",
     "json_double_decode",
     "json_props_sum",
-    "kmv_distinct",
-    "langid_confusion",
-    "latest_event_per_key",
-    "length_histogram",
-    "lsh_recall_audit",
-    "lsh_recall_audit_sampled",
-    "minhash_decontaminate",
     "multimodal_decode",
-    "multimodal_frame_sample",
     "multimodal_metadata_stats",
-    "multimodal_resize",
-    "normalize_text",
     "pack_sequences",
-    "payout_accumulation",
-    "pii_redact",
-    "post_with_votes",
-    "pq_recall_audit",
-    "pq_train",
     "prefix_select",
-    "pricing_summary",
     "quality_filter",
-    "range_join_events",
-    "reblogged_by_agg",
     "recent_orders_window",
-    "regional_revenue",
-    "replies_in_notin",
     "reward_curves",
-    "rrf_hybrid_search",
-    "sales_rollup",
-    "sampled_quantiles",
     "segment_nation_counts",
-    "segment_region_cube",
-    "sessionize",
-    "set_diff_reconcile",
-    "shipping_priority",
-    "sliding_event_counts",
-    "source_vocab_overlap",
     "stratified_sample",
     "supplier_visible_revenue",
-    "tag_membership",
     "text_fingerprint",
     "text_lang_id",
     "text_quality_score",
     "text_repetition",
     "text_token_counts",
-    "tfidf_keywords",
     "time_format_wire",
-    "token_count_quantiles",
-    "top_ngrams",
     "trending_tags",
+    # --- stalest fill (last driver-green r10)
+    "clustered_adaptive_occupancy_audit",
+    "daily_moving_avg",
+    "discussions_by_promoted",
+    "embedding_lsh_flips1_recall_audit",
+    "embedding_lsh_multiprobe_recall_audit",
+    "embedding_lsh_recall_audit",
+    "events_pivot",
+    "feed_semijoin",
+    "follow_counts",
+    "hll_distinct",
+    "hourly_hll_distinct",
+    "kmv_distinct",
+    "langid_confusion",
+    "latest_event_per_key",
+    "length_histogram",
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "normalize_text",
+    "payout_accumulation",
+    "pii_redact",
+    "post_with_votes",
+    "pricing_summary",
+    "range_join_events",
+    "reblogged_by_agg",
+    "regional_revenue",
+    "replies_in_notin",
+    "sales_rollup",
+    "sampled_quantiles",
+]
+# rotated past the 50-slot cap (regenerated each round so head + this =
+# registry). Every one stays hash-checked locally each round
+# (tests/test_driver_queries.py) and in the committed LOCAL_CORRECTNESS
+# artifact (local_correctness.py). Disjoint from _DRIVER_PRIORITY and
+# _ROUND_MODIFIED by construction (ADVICE r11 #3);
+# test_rotation_lists_are_disjoint pins it. The 11 r10-green names left
+# here (segment_region_cube .. weighted_sample) must lead the r15 head.
+_DRIVER_ROTATE_LAST = [
+    "above_nation_avg_balance",
+    "account_history_page",
+    "adaptive_maintenance_audit",
+    "ann_ivf_kmeans_nprobe",
+    "ann_ivf_kmeans_topk",
+    "ann_ivf_nprobe_topk",
+    "ann_ivf_sharded_recall_audit",
+    "ann_ivf_sharded_topk",
+    "ann_ivf_topk",
+    "ann_ivfpq_batch",
+    "ann_ivfpq_residual_topk",
+    "ann_ivfpq_topk",
+    "ann_ivfpq_trained_topk",
+    "ann_pq_topk",
+    "ann_pq_trained_topk",
+    "ann_query_batch",
+    "ann_recall_audit",
+    "ann_sq8_topk",
+    "ann_topk_bruteforce",
+    "asof_purchase_attribution",
+    "authorperm_codec",
+    "balanced_sample",
+    "bigram_perplexity",
+    "blog_union_minjoin",
+    "bloom_membership",
+    "bm25_search",
+    "build_vocab",
+    "children_counts",
+    "chunk_dedup",
+    "chunk_documents",
+    "chunk_excise",
+    "clustered_adaptive_ivfpq_topk",
+    "clustered_adaptive_merge_audit",
+    "clustered_adaptive_probe_recall_audit",
+    "clustered_adaptive_semdedup_audit",
+    "clustered_adaptive_semdedup_w2_audit",
+    "clustered_adaptive_semdedup_w2k16_audit",
+    "clustered_adaptive_topk_p1",
+    "clustered_adaptive_topk_p2",
+    "clustered_fixture_stats",
+    "clustered_ivf_occupancy_audit",
+    "clustered_ivfpq_residual_recall_audit",
+    "clustered_ivfpq_residual_topk",
+    "clustered_ivfpq_trained_recall_audit",
+    "clustered_ivfpq_trained_topk",
+    "clustered_kmeans_agreement_audit",
+    "clustered_mass_fixture_stats",
+    "clustered_mass_occupancy_audit",
+    "clustered_mass_semdedup_audit",
+    "clustered_pq_variant_audit",
+    "clustered_semdedup_audit",
+    "cms_heavy_hitters",
+    "corpus_datasheet",
+    "cross_source_dup_matrix",
+    "curated_corpus",
+    "curriculum_buckets",
+    "decontaminate",
+    "dedup_best_representative",
+    "dedup_cluster_stats",
+    "dedup_clusters",
+    "dedup_embedding_cosine",
+    "dedup_embedding_lsh",
+    "dedup_embedding_lsh_flips1",
+    "dedup_embedding_lsh_flips3",
+    "dedup_embedding_lsh_multiprobe",
+    "dedup_embedding_lsh_single_probe",
+    "dedup_exact",
+    "dedup_exact_keep_first",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_simhash_pairs",
+    "deterministic_shuffle",
+    "discussions_by_created",
+    "doc_novelty",
+    "dup_inflation",
+    "earliest_event_per_user",
+    "embedding_dim_stats",
+    "embedding_kmeans",
+    "embedding_lsh_planted_recall_audit",
+    "embedding_outliers",
+    "event_funnel",
+    "event_zscore_anomaly",
+    "graph_pagerank",
+    "hard_negatives",
+    "hll_daily_merge",
+    "index_occupancy_audit",
+    "ivfpq_recall_audit",
+    "ivfpq_residual_recall_audit",
+    "ivfpq_trained_recall_audit",
+    "kmv_set_ops",
+    "leakage_free_split",
+    "lsh_recall_audit",
+    "lsh_recall_audit_sampled",
+    "minhash_decontaminate",
+    "mixture_weights",
+    "pq_recall_audit",
+    "pq_train",
+    "pq_trained_recall_audit",
+    "quantile_error_audit",
+    "rrf_hybrid_search",
+    "segment_region_cube",
+    "semdedup",
+    "sessionize",
+    "set_diff_reconcile",
+    "shipping_priority",
+    "sliding_event_counts",
+    "source_vocab_overlap",
+    "split_leakage_audit",
+    "substring_dup_spans",
+    "tag_membership",
+    "tfidf_keywords",
+    "thread_tree",
+    "token_count_quantiles",
+    "top_boilerplate_spans",
+    "top_ngrams",
     "tumbling_event_counts",
     "unigram_perplexity",
     "url_density",
     "weighted_sample",
+    "zipf_slope",
 ]
 
 # ROTATION POLICY (standing rule, not a one-off): any query whose
@@ -198,50 +229,8 @@ _DRIVER_ROTATE_LAST = [
 # rotated past position 50.
 # tests/test_driver_queries.py::test_round_modified_queries_inside_driver_cap
 # enforces the placement (and that nothing listed here is simultaneously
-# rotated last).
-_ROUND_MODIFIED = [
-    # r13 OPTIMIZATION round, construction-cost collapse wave 2: bodies
-    # rewritten as one-parse SQL text (selectExpr/F.expr) — plan-identical
-    # by construction (plans/r13/<q>_{before,after}.txt normalize to zero
-    # diff lines; kernel parity pinned in tests/test_sql_expr_parity.py;
-    # results hash-pinned unchanged vs the DuckDB oracles). Store
-    # read-or-compute: the two fixture-stats queries + the semdedup
-    # audit's fixture input now read the cf/cmass fit stores when built.
-    "ann_sq8_topk",
-    "ann_topk_bruteforce",
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_nprobe",
-    "ann_ivfpq_topk",
-    "ann_pq_trained_topk",
-    "ann_ivfpq_residual_topk",
-    "ann_ivfpq_batch",
-    "ann_query_batch",
-    "dedup_embedding_cosine",
-    "semdedup",
-    "ann_ivf_sharded_topk",
-    "ivfpq_recall_audit",
-    "ann_recall_audit",
-    "pq_trained_recall_audit",
-    "ann_ivf_sharded_recall_audit",
-    "clustered_fixture_stats",
-    "clustered_mass_fixture_stats",
-    "clustered_semdedup_audit",
-    "clustered_pq_variant_audit",
-    "clustered_ivfpq_residual_topk",
-    "clustered_ivfpq_trained_recall_audit",
-    "clustered_adaptive_probe_recall_audit",
-    "cms_heavy_hitters",
-    "kmv_set_ops",
-    "bloom_membership",
-    "embedding_dim_stats",
-    "index_occupancy_audit",
-    "split_leakage_audit",
-    "event_zscore_anomaly",
-    "zipf_slope",
-    "dedup_minhash_lsh",
-    "thread_tree",
-    "graph_pagerank",
-]
+# rotated last). r14 changes no query body.
+_ROUND_MODIFIED: list[str] = []
 
 def _ordered(names: list[str]) -> list[str]:
     head = [n for n in _DRIVER_PRIORITY if n in names]

@@ -34,17 +34,7 @@ from ..functions import (
 from ..functions.dmp import fold_body_edits
 from ..operators import additive_merge, delete_by_keys, merge_upsert
 from ..operators.skew import hot_key_aggregate
-
-# Every state table apply_l1_batch (and the runner on its behalf) can write.
-# The streaming runner derives its touched-partition scoping from this: a
-# partitioned/bucketed table NOT listed here is skipped entirely during an
-# L1 save. If a processor below gains a new table write, list it here or
-# that write is silently dropped at save time (test_processor_writes_decl
-# cross-checks this set against the apply functions).
-L1_WRITES = frozenset({
-    "posts", "post_metadata", "accounts", "follows", "reblogs",
-    "token_config", "configuration",
-})
+from ..session import batch_persist
 
 
 def _seq():
@@ -97,6 +87,7 @@ def apply_l1_batch(state: dict[str, DataFrame], ops: DataFrame) -> dict[str, Dat
     """Apply one batch of L1 ops. Dispatch mirrors stream_blocks.py:125-158."""
     ops = _with_seq_ap(ops)
     flags = _batch_flags(ops)
+    loaded_posts = state["posts"]
     comments = ops.filter(F.col("type") == "comment")
     deletes = ops.filter(F.col("type") == "delete_comment")
     cjson = ops.filter(F.col("type") == "custom_json")
@@ -118,6 +109,10 @@ def apply_l1_batch(state: dict[str, DataFrame], ops: DataFrame) -> dict[str, Dat
     state = apply_comments(state, comments, present=flags["comments"])
     state = apply_deletes(state, deletes, present=flags["deletes"])
     state = apply_follows(state, cjson, present=flags["follows"])
+    if flags["reblogs"] and state["posts"] is not loaded_posts:
+        # the batch's new posts chain: read by the reblog semi-join and
+        # again by the posts write
+        state = {**state, "posts": batch_persist(state["posts"])}
     state = apply_reblogs(state, cjson, present=flags["reblogs"])
     state = apply_tribe_settings(state, cjson, present=flags["tribe"])
     return state
@@ -184,8 +179,12 @@ def apply_comments(
     edits = c.select("authorperm", "block_num", "op_seq", "body")
     bodies = fold_body_edits(seeds.unionByName(edits))
 
-    final = last_op.drop("body").join(bodies, "authorperm", "left").withColumn(
-        "desc", truncate(F.col("body"), 300)
+    # the body fold feeds the posts, accounts and post_metadata deltas (and,
+    # through posts, the reblog semi-join): computed once per batch
+    final = batch_persist(
+        last_op.drop("body").join(bodies, "authorperm", "left").withColumn(
+            "desc", truncate(F.col("body"), 300)
+        )
     )
 
     # posts: update scalar fields on every (authorperm, token) row

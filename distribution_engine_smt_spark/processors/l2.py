@@ -34,14 +34,7 @@ from ..functions.scoring import SCORE_TIMESCALE_HOT, SCORE_TIMESCALE_TREND
 from ..functions.timeutils import add_days
 from ..operators import additive_merge, merge_upsert
 from ..operators.skew import hot_key_aggregate
-
-# Every state table apply_l2_batch (and the runner on its behalf) can write —
-# the runner's touched-partition scoping skips partitioned/bucketed tables
-# not listed here (see L1_WRITES in l1.py for the contract).
-L2_WRITES = frozenset({
-    "posts", "votes", "account_history", "accounts", "token_config",
-    "configuration",
-})
+from ..session import batch_persist
 
 
 def _seq():
@@ -235,6 +228,7 @@ def apply_l2_batch(
     """Apply one batch of L2 transactions in event order."""
     ok = _ok_txs(txs)
     flags = _batch_flags(ok)
+    loaded_posts = state["posts"]
     comments_txs = ok.filter(F.col("contract") == "comments")
     events = _explode_events(comments_txs)
 
@@ -243,6 +237,10 @@ def apply_l2_batch(
     state = apply_votes(state, events, present=flags["votes"])
     state = apply_rewards(state, events, present=flags["rewards"])
     state = apply_reward_pools(state, events, present=flags["pools"])
+    if flags["promotions"] and state["posts"] is not loaded_posts:
+        # the batch's mutes -> newComment -> votes -> rewards posts chain:
+        # read by the promotion probe and merge and again by the posts write
+        state = {**state, "posts": batch_persist(state["posts"])}
     state = apply_promotions(state, ok, present=flags["promotions"])
     return state
 

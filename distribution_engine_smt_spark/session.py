@@ -10,6 +10,8 @@ naive UTC — stream_blocks.py:255-257), Arrow for the few pandas-UDF paths.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +38,44 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     paired ``unpersist()`` pins the blocks for the session lifetime.
     """
     _TRACKED_PERSISTS.append(df.persist())
+    return df
+
+
+# ---------------------------------------------------------------------------
+# batch scope: an ingest batch's new state is a set of lazy plans that share
+# upstream work (the DMP body fold, the chained posts merges), and every
+# table write or probe would otherwise re-run the shared part. The
+# processors persist each frame that more than one action of the batch
+# reads; the runner opens one scope per batch and unpersists those frames
+# once the batch's state swap has committed. The scope is thread-local
+# because the L1 and L2 streams run their foreachBatch callbacks
+# concurrently, each on its own thread.
+# ---------------------------------------------------------------------------
+_BATCH = threading.local()
+
+
+@contextmanager
+def batch_scope():
+    """Own every ``batch_persist`` frame made on this thread until exit."""
+    outer = getattr(_BATCH, "frames", None)
+    frames: list[DataFrame] = []
+    _BATCH.frames = frames
+    try:
+        yield
+    finally:
+        _BATCH.frames = outer
+        for df in frames:
+            df.unpersist()
+
+
+def batch_persist(df: DataFrame) -> DataFrame:
+    """``df.persist()`` released when the enclosing ``batch_scope`` exits.
+    Outside a scope (a processor called directly) the frame is tracked for
+    the session instead, so ``release_caches`` frees it."""
+    frames = getattr(_BATCH, "frames", None)
+    if frames is None:
+        return tracked_persist(df)
+    frames.append(df.persist())
     return df
 
 

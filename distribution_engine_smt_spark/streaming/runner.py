@@ -37,6 +37,20 @@ Scale: state tables re-written per micro-batch are the token-partitioned
 parquet layout from ``tables.write_table``; writes are staged to a scratch
 directory and promoted by directory rename, so a batch touching 2 tokens
 stages and swaps 2 partition directories, never the table.
+
+Per batch, shared work runs once and unchanged tables are not written:
+
+- A batch's new state is a set of lazy plans that share upstream work.
+  The processors persist each frame more than one of the batch's actions
+  reads (the DMP body fold of L1 comments, and the chained posts merges
+  read by the reblog and promotion folds), and every later action reads
+  the cached copy. The batch's ``session.batch_scope`` unpersists them
+  once the state swap has committed; the scope is per thread, since the
+  L1 and L2 streams run ``foreachBatch`` concurrently.
+- Only tables whose frame is not the loaded one are staged: an L2 batch
+  without reward pools leaves follows, reblogs and token_config as they
+  are on disk.
+- The checkpoint row is one aggregate over the batch, built JVM-side.
 """
 
 from __future__ import annotations
@@ -50,7 +64,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas, tables
+from ..functions import construct_authorperm, is_main_post
 from ..processors import apply_l1_batch, apply_l2_batch
+from ..session import batch_scope
 from .stateful import vote_delta_stream
 
 HEAD_DELAY_SECONDS = 15  # reference: stream_blocks.py:82
@@ -79,25 +95,31 @@ def l2_alignment_bound(state: dict[str, DataFrame]):
     return row[0] if row else None
 
 
-def _checkpoint_row(spark: SparkSession, cfg_id: int, name: str, batch: DataFrame,
+def _checkpoint_row(cfg_id: int, name: str, batch: DataFrame,
                     block_col: str, ts_col: str) -> DataFrame:
-    head = batch.agg(
-        F.max(block_col).alias("b"), F.max(ts_col).alias("t")
-    ).first()
+    """The stream's configuration row (id 1 = L1, id 2 = L2): the batch's
+    head block and timestamp in that stream's two columns. One lazy
+    aggregate over the batch, so the row never leaves the JVM: no driver
+    collect and no Python worker to parallelize a local list."""
+    b, t, none = F.max(block_col), F.max(ts_col), F.lit(None)
     is_l2 = cfg_id == 2
-    return spark.createDataFrame(
-        [
-            (
-                cfg_id,
-                None if is_l2 else head["b"],
-                None if is_l2 else head["t"],
-                head["b"] if is_l2 else None,
-                head["t"] if is_l2 else None,
-                name,
-            )
-        ],
-        schemas.CONFIGURATION,
-    )
+    cols = {
+        "id": F.lit(cfg_id),
+        "last_streamed_block": none if is_l2 else b,
+        "last_streamed_timestamp": none if is_l2 else t,
+        "last_engine_streamed_block": b if is_l2 else none,
+        "last_engine_streamed_timestamp": t if is_l2 else none,
+        "name": F.lit(name),
+    }
+    return batch.agg(*[
+        cols[f.name].cast(f.dataType).alias(f.name) for f in schemas.CONFIGURATION.fields
+    ])
+
+
+def _changed_tables(state: dict[str, DataFrame], new_state: dict[str, DataFrame]) -> list[str]:
+    """Tables a batch changed: the processors hand back the loaded frame
+    itself for every table they leave alone, so only the others are staged."""
+    return [n for n in schemas.STATE_TABLES if new_state[n] is not state[n]]
 
 
 class DualStreamRunner:
@@ -292,81 +314,14 @@ class DualStreamRunner:
         if eligible.isEmpty():
             self._save_holdback("l1", parked)
             return
-        new_state = apply_l1_batch(state, eligible)
-        ckpt = _checkpoint_row(self.spark, 1, "HIVED", eligible, "block_num", "timestamp")
-        from ..operators import merge_upsert
-
-        new_state["configuration"] = merge_upsert(
-            new_state["configuration"], ckpt, ["id"]
-        )
-        # post_metadata is hash-bucketed on disk; a batch's comment ops touch
-        # only the buckets of their own authorperms plus (children counters)
-        # their parents'. Scoping the save rewrites those bucket dirs, not
-        # the table — the largest L1 table (bodies) stops being a full
-        # rewrite per micro-batch.
-        from ..functions import construct_authorperm, is_main_post
-
-        com = eligible.filter(F.col("type") == "comment")
-        meta_keys = com.select(
-            construct_authorperm(F.col("author"), F.col("permlink")).alias("authorperm")
-        ).unionByName(
-            com.filter(
-                ~F.coalesce(
-                    is_main_post(F.col("parent_author"), F.col("parent_permlink")),
-                    F.lit(True),
-                )
-            ).select(
-                construct_authorperm(
-                    F.col("parent_author"), F.col("parent_permlink")
-                ).alias("authorperm")
-            )
-        ).filter(F.col("authorperm").isNotNull())
-        meta_buckets = [
-            r[0]
-            for r in meta_keys.select(
-                tables.bucket_expr("post_metadata").alias("b")
-            ).distinct().collect()
-        ]
-        # token partitions: L1 comments/deletes only ever touch posts and
-        # accounts rows whose authorperm appears in the batch (comments
-        # update existing rows — the semi-join in apply_comments — and
-        # deletes remove pre-batch rows), so the touched token set is the
-        # tokens of the PRE-batch posts rows for those authorperms. L1
-        # never writes votes or account_history at all.
-        del_aps = eligible.filter(F.col("type") == "delete_comment").select(
-            construct_authorperm(F.col("author"), F.col("permlink")).alias(
-                "authorperm"
-            )
-        )
-        all_aps = meta_keys.unionByName(del_aps).filter(
-            F.col("authorperm").isNotNull()
-        ).distinct()
-        tokens = [
-            r[0]
-            for r in state["posts"]
-            .join(all_aps, "authorperm", "left_semi")
-            .select("token")
-            .distinct()
-            .collect()
-        ]
-        # state (including the new HWM) promotes atomically first, holdback
+        # the scope owns the frames the processors persist for this batch;
+        # they are released once the swap inside has committed. State
+        # (including the new HWM) promotes atomically first, holdback
         # second: a crash between the two re-runs the batch against the OLD
         # holdback, and the HWM filter discards the already-applied blocks
         # — never the reverse order, which could lose parked ops
-        touched = {
-            "post_metadata": meta_buckets,
-            "posts": tokens,
-            "accounts": tokens,
-        }
-        # every scoped (partitioned/bucketed) table the L1 processors never
-        # write is skipped — the write-set is declared next to the
-        # processors (L1_WRITES) so this stays in sync with them
-        from ..processors.l1 import L1_WRITES
-
-        for name in set(tables.PARTITION_COLUMNS) | set(tables.HASH_BUCKETS):
-            if name not in L1_WRITES:
-                touched.setdefault(name, [])
-        self.save_state(new_state, touched_partitions=touched)
+        with batch_scope():
+            self._commit_l1(state, eligible)
         self._save_holdback("l1", parked)
 
     def process_l2_batch(self, txs: DataFrame, batch_id: int, now: datetime | None = None) -> None:
@@ -388,10 +343,79 @@ class DualStreamRunner:
             self._save_holdback("l2", parked)
             return
         txs = eligible
-        new_state = apply_l2_batch(state, txs)
-        ckpt = _checkpoint_row(self.spark, 2, "ENGINE_SIDECHAIN", txs, "blockNumber", "timestamp")
+        with batch_scope():
+            self._commit_l2(state, txs)
+        self._save_holdback("l2", parked)
+
+    def _commit_l1(self, state: dict[str, DataFrame], eligible: DataFrame) -> None:
+        """Fold one gated L1 batch into ``state`` and swap in what changed."""
+        new_state = apply_l1_batch(state, eligible)
         from ..operators import merge_upsert
 
+        ckpt = _checkpoint_row(1, "HIVED", eligible, "block_num", "timestamp")
+        new_state["configuration"] = merge_upsert(
+            new_state["configuration"], ckpt, ["id"]
+        )
+        changed = _changed_tables(state, new_state)
+        touched: dict[str, list] = {}
+        com = eligible.filter(F.col("type") == "comment")
+        meta_keys = com.select(
+            construct_authorperm(F.col("author"), F.col("permlink")).alias("authorperm")
+        ).unionByName(
+            com.filter(
+                ~F.coalesce(
+                    is_main_post(F.col("parent_author"), F.col("parent_permlink")),
+                    F.lit(True),
+                )
+            ).select(
+                construct_authorperm(
+                    F.col("parent_author"), F.col("parent_permlink")
+                ).alias("authorperm")
+            )
+        ).filter(F.col("authorperm").isNotNull())
+        if "post_metadata" in changed:
+            # post_metadata is hash-bucketed on disk; a batch's comment ops
+            # touch only the buckets of their own authorperms plus
+            # (children counters) their parents'. Scoping the save rewrites
+            # those bucket dirs, not the table — the largest L1 table
+            # (bodies) stops being a full rewrite per micro-batch.
+            touched["post_metadata"] = [
+                r[0]
+                for r in meta_keys.select(
+                    tables.bucket_expr("post_metadata").alias("b")
+                ).distinct().collect()
+            ]
+        if "posts" in changed or "accounts" in changed:
+            # token partitions: L1 comments/deletes only ever touch posts and
+            # accounts rows whose authorperm appears in the batch (comments
+            # update existing rows — the semi-join in apply_comments — and
+            # deletes remove pre-batch rows), so the touched token set is the
+            # tokens of the PRE-batch posts rows for those authorperms
+            del_aps = eligible.filter(F.col("type") == "delete_comment").select(
+                construct_authorperm(F.col("author"), F.col("permlink")).alias(
+                    "authorperm"
+                )
+            )
+            all_aps = meta_keys.unionByName(del_aps).filter(
+                F.col("authorperm").isNotNull()
+            ).distinct()
+            tokens = [
+                r[0]
+                for r in state["posts"]
+                .join(all_aps, "authorperm", "left_semi")
+                .select("token")
+                .distinct()
+                .collect()
+            ]
+            touched["posts"] = touched["accounts"] = tokens
+        self.save_state(new_state, only=changed, touched_partitions=touched)
+
+    def _commit_l2(self, state: dict[str, DataFrame], txs: DataFrame) -> None:
+        """Fold one gated L2 batch into ``state`` and swap in what changed."""
+        new_state = apply_l2_batch(state, txs)
+        from ..operators import merge_upsert
+
+        ckpt = _checkpoint_row(2, "ENGINE_SIDECHAIN", txs, "blockNumber", "timestamp")
         new_state["configuration"] = merge_upsert(
             new_state["configuration"], ckpt, ["id"]
         )
@@ -437,15 +461,11 @@ class DualStreamRunner:
             "account_history": tokens,
             "accounts": tokens,
         }
-        # scoped tables outside the declared L2 write-set (e.g.
-        # post_metadata, which only L1 comment ops write) are skipped
-        from ..processors.l2 import L2_WRITES
-
-        for name in set(tables.PARTITION_COLUMNS) | set(tables.HASH_BUCKETS):
-            if name not in L2_WRITES:
-                touched.setdefault(name, [])
-        self.save_state(new_state, touched_partitions=touched)
-        self._save_holdback("l2", parked)
+        self.save_state(
+            new_state,
+            only=_changed_tables(state, new_state),
+            touched_partitions=touched,
+        )
 
     def apply_vote_delta_batch(self, deltas: DataFrame, batch_id: int) -> None:
         """Sink for the continuous vote-fold mode (run_l2_vote_stream, ST7):

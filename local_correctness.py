@@ -76,7 +76,7 @@ def run(sf_dir: str, out_path: str, only: list[str] | None = None) -> dict[str, 
     con = duck_con(sf_dir)
     records: dict[str, dict] = {}
     t_start = time.perf_counter()
-    names = sorted(QUERIES) if only is None else [n for n in only if n in QUERIES]
+    names = sorted(QUERIES) if only is None else list(only)
     for i, name in enumerate(names, 1):
         rec = {
             "rows_match": False,
@@ -142,7 +142,7 @@ def _value_compare(sp, du) -> list[str]:
     ]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--round", type=int, default=None)
     ap.add_argument(
@@ -159,10 +159,17 @@ def main() -> None:
         "(dev loop for touched queries; the committed artifact is "
         "always a full sweep)",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     rnd = args.round if args.round is not None else default_round()
     out = args.out or os.path.join(ROOT, f"LOCAL_CORRECTNESS_r{rnd:02d}.json")
     only = args.only.split(",") if args.only else None
+    if only is not None:
+        import distribution_engine_smt_spark.pipeline  # noqa: F401 (registers)
+        from distribution_engine_smt_spark.driver_queries import QUERIES
+
+        unknown = [n for n in only if n not in QUERIES]
+        if unknown:
+            ap.error(f"--only: unknown query names: {unknown}")
     records = run(args.sf_dir, out, only=only)
     bad = [
         n

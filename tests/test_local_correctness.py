@@ -117,3 +117,16 @@ def test_rotation_keeps_driver_evidence_fresh():
         f"driver evidence would age past {MAX_EVIDENCE_AGE} rounds for "
         f"queries outside the driver head: {overdue}"
     )
+
+
+def test_only_rejects_unknown_query_names(capsys):
+    """``local_correctness.py --only`` names every unknown query and exits
+    non-zero before starting Spark, instead of silently dropping it."""
+    import local_correctness
+
+    with pytest.raises(SystemExit) as exc:
+        local_correctness.main(["--only", "trending_tags,no_such_query,typo_q"])
+    assert exc.value.code != 0
+    err = capsys.readouterr().err
+    assert "no_such_query" in err and "typo_q" in err
+    assert "trending_tags" not in err
