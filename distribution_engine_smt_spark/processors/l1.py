@@ -229,29 +229,23 @@ def apply_comments(
         new_posts, parent_exists, ["authorperm"], add_cols=["children"]
     )
 
-    # accounts: last_post / last_root_post per (author, token) they post under
-    acct_delta = (
+    # accounts: last_post / last_root_post per (author, token) they post
+    # under, in one keyed merge: only the column that fired is set, and a new
+    # (author, token) is inserted with its other columns NULL
+    set_cols = ("last_root_post", "last_post")
+    fired = (
         final.join(posts.select("authorperm", "token"), "authorperm")
         .groupBy(F.col("author").alias("name"), F.col("token").alias("symbol"))
         .agg(
-            F.max(F.when(F.col("main_post"), F.col("timestamp"))).alias("last_root_post"),
-            F.max(F.when(~F.col("main_post"), F.col("timestamp"))).alias("last_post"),
-            F.max("seq").alias("seq"),
+            F.max(F.when(F.col("main_post"), F.col("timestamp"))).alias("__d_last_root_post"),
+            F.max(F.when(~F.col("main_post"), F.col("timestamp"))).alias("__d_last_post"),
         )
+        .filter(F.col("__d_last_root_post").isNotNull() | F.col("__d_last_post").isNotNull())
     )
-    # partial upsert: only set the column that fired
-    roots = acct_delta.filter(F.col("last_root_post").isNotNull()).select(
-        "name", "symbol", "last_root_post", "seq"
-    )
-    non_roots = acct_delta.filter(F.col("last_post").isNotNull()).select(
-        "name", "symbol", "last_post", "seq"
-    )
-    new_accounts = merge_upsert(
-        accounts, roots, ["name", "symbol"], seq_col="seq", update_cols=["last_root_post"]
-    )
-    new_accounts = merge_upsert(
-        new_accounts, non_roots, ["name", "symbol"], seq_col="seq", update_cols=["last_post"]
-    )
+    new_accounts = accounts.join(fired, ["name", "symbol"], "full_outer").select(*[
+        F.coalesce(F.col(f"__d_{c}"), F.col(c)).alias(c) if c in set_cols else F.col(c)
+        for c in accounts.columns
+    ])
 
     # post_metadata: body, raw json_metadata, tags, parent link, depth/url
     # inheritance (comment_processor_for_engine.py:174-201)

@@ -13,6 +13,30 @@ Event families handled (logs.events[], contract='comments'):
 Actions: setMute -> accounts.muted; setPostMute -> posts.muted.
 tokens.transfer with authorperm memo -> promotion (promoted += qty, score).
 
+Votes, accounts, account_history and token_config each take one merge per
+batch. Posts take ONE keyed fold per batch (``_fold_posts``): every
+posts-touching family emits per-(authorperm, token) rows in one column
+layout, one salted aggregate folds them per post, and one full outer join
+with the loaded posts applies the families in this order, each reading the
+state the one before it left:
+  1. setPostMute      -> muted, on loaded posts only.
+  2. newComment       -> the last one by seq inserts or overwrites the row:
+                         author, created, cashout_time (the loaded
+                         token_config's window, default 7 days),
+                         main_post=false, muted from the author's account
+                         after this batch's setMute, counters and scores 0,
+                         last_payout the epoch; other columns carried.
+  3. votes            -> on loaded or newComment'd posts:
+                         vote_rshares += sum(last rshares per voter - stored),
+                         trend/hot rescored at the last vote's timestamp.
+  4. rewards          -> on any post, a missing one inserted: payouts added,
+                         last_payout the latest event, authorReward zeroes
+                         vote_rshares and both scores.
+  5. promotions       -> on posts that exist after 4: promoted += quantity,
+                         score_promoted rescored from created.
+A family in the batch reads its counters as coalesce(x, 0) on every row it
+reaches, as ``operators.additive_merge`` does.
+
 Documented deviations (query-visible and deliberate):
 - payout flush sets last_payout = event timestamp on EXISTING posts too.
   The reference only sets it when the post row is missing
@@ -21,6 +45,9 @@ Documented deviations (query-visible and deliberate):
 - authorReward resets vote_rshares/score_trend/score_hot to 0. The
   reference stages the reset in its dict but the flush never writes it
   for existing rows (same stale-row write-back).
+- a NULL promoted (e.g. on a post a reward inserted) reads 0 whenever the
+  batch holds a tokens transfer, even one that promotes no post; it stays
+  NULL in a batch without one.
 """
 
 from __future__ import annotations
@@ -32,9 +59,10 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 from ..functions import memo_to_authorperm, score
 from ..functions.scoring import SCORE_TIMESCALE_HOT, SCORE_TIMESCALE_TREND
 from ..functions.timeutils import add_days
-from ..operators import additive_merge, merge_upsert
+# additive_merge is not called here (the posts fold adds inline, _add), but
+# perfbench/ingest.py times both merge primitives through this module
+from ..operators import additive_merge, merge_upsert  # noqa: F401
 from ..operators.skew import hot_key_aggregate
-from ..session import batch_persist
 
 
 def _seq():
@@ -151,12 +179,6 @@ def _batch_flags(ok: DataFrame) -> dict[str, bool]:
     return {k: bool(row[k]) for k in row.asDict()}
 
 
-def _skip(df: DataFrame, present: bool | None) -> bool:
-    """Family guard: trust the precomputed batch flag when given, else fall
-    back to a per-call isEmpty (direct/unit use of one apply_* function)."""
-    return (not present) if present is not None else df.isEmpty()
-
-
 def _ok_txs(txs: DataFrame) -> DataFrame:
     """Sequence + parse the tx log and apply the error-log gate (reference:
     custom_json_processor.py:50-66, engine_comments_contract_processor.py:33,42).
@@ -225,36 +247,138 @@ def parse_vote_rows(events: DataFrame) -> DataFrame:
 def apply_l2_batch(
     state: dict[str, DataFrame], txs: DataFrame
 ) -> dict[str, DataFrame]:
-    """Apply one batch of L2 transactions in event order."""
+    """Apply one batch of L2 transactions in event order.
+
+    Each family folds its own table (accounts, votes, account_history,
+    token_config) and emits its posts rows in the shared delta layout;
+    ``_fold_posts`` folds every posts row of the batch in one keyed pass.
+    A batch with no posts family keeps the loaded posts frame itself."""
     ok = _ok_txs(txs)
     flags = _batch_flags(ok)
-    loaded_posts = state["posts"]
     comments_txs = ok.filter(F.col("contract") == "comments")
     events = _explode_events(comments_txs)
 
-    state = apply_mutes(state, comments_txs, present=flags["mutes"])
-    state = apply_new_comments(state, events, present=flags["new_comments"])
-    state = apply_votes(state, events, present=flags["votes"])
-    state = apply_rewards(state, events, present=flags["rewards"])
-    state = apply_reward_pools(state, events, present=flags["pools"])
-    if flags["promotions"] and state["posts"] is not loaded_posts:
-        # the batch's mutes -> newComment -> votes -> rewards posts chain:
-        # read by the promotion probe and merge and again by the posts write
-        state = {**state, "posts": batch_persist(state["posts"])}
-    state = apply_promotions(state, ok, present=flags["promotions"])
-    return state
+    out = dict(state)
+    deltas = []
+    for family, fold, rows in (
+        ("mutes", apply_mutes, comments_txs),
+        ("new_comments", apply_new_comments, events),
+        ("votes", apply_votes, events),
+        ("rewards", apply_rewards, events),
+        ("pools", apply_reward_pools, events),
+        ("promotions", apply_promotions, ok),
+    ):
+        if flags[family]:
+            updated, delta = fold(out, rows)
+            out.update(updated)
+            if delta is not None:
+                deltas.append(delta)
+    if deltas:
+        out["posts"] = _fold_posts(state["posts"], deltas, flags)
+    return out
+
+
+# ---------------------------------------------------------------------------
+# the posts fold: every posts-touching family emits per-(authorperm, token)
+# rows in this one layout, leaving the other families' columns NULL
+# ---------------------------------------------------------------------------
+_POST_DELTA = (  # (column, type, per-post aggregate); structs lead with seq
+    ("mute", "struct<seq:bigint,muted:boolean>", "max"),
+    ("nc", "struct<seq:bigint,author:string,created:timestamp,"
+           "cashout_time:timestamp,muted:boolean>", "max"),
+    ("vote_delta", _NUM, "sum"),
+    ("vote_ts", "timestamp", "max"),
+    ("payout", _NUM, "sum"),
+    ("curator_payout", _NUM, "sum"),
+    ("beneficiaries_payout", _NUM, "sum"),
+    ("payout_ts", "timestamp", "max"),
+    ("author_reward", "int", "max"),
+    ("promotion", _NUM, "sum"),
+)
+_KEYS = ["authorperm", "token"]
+
+
+def _post_delta(rows: DataFrame, **cols) -> DataFrame:
+    """``rows`` (with authorperm, token) -> the shared posts-delta layout."""
+    return rows.select(
+        *_KEYS,
+        *[cols.get(name, F.lit(None)).cast(typ).alias(name) for name, typ, _ in _POST_DELTA],
+    )
+
+
+def _add(current, delta, dtype):
+    """A counter update exactly as ``additive_merge`` computes it."""
+    zero = F.lit(0).cast(dtype)
+    return F.coalesce(current, zero) + F.coalesce(delta.cast(dtype), zero)
+
+
+def _fold_posts(
+    posts: DataFrame, deltas: list[DataFrame], flags: dict[str, bool]
+) -> DataFrame:
+    """One salted per-post aggregate over the batch's delta rows, one full
+    outer join with the loaded posts, one projection applying the families
+    in order (module docstring). ``__loaded`` marks a loaded key, so each
+    family's existence rule is a column test, not a semi-join."""
+    rows = deltas[0]
+    for d in deltas[1:]:
+        rows = rows.unionByName(d)
+    # salted two-phase fold: a viral post's votes, payouts or promotions
+    # would all land on one reducer under a plain groupBy (operators/skew.py)
+    per_post = hot_key_aggregate(rows, _KEYS, {c: (c, fn) for c, _, fn in _POST_DELTA})
+    joined = posts.withColumn("__loaded", F.lit(True)).join(per_post, _KEYS, "full_outer")
+    dtype = {f.name: f.dataType for f in posts.schema.fields}
+    col = {c: F.col(c) for c in posts.columns}
+    loaded = F.col("__loaded").isNotNull()
+    exists = loaded
+
+    if flags["mutes"]:  # loaded keys only
+        mute = F.col("mute")
+        col["muted"] = F.when(loaded & mute.isNotNull(), mute["muted"]).otherwise(col["muted"])
+    if flags["new_comments"]:  # insert or overwrite; other columns carried
+        nc = F.col("nc")
+        for c, v in _new_post_values(nc).items():
+            col[c] = F.when(nc.isNotNull(), v).otherwise(col[c])
+        exists = exists | nc.isNotNull()
+    if flags["votes"]:  # loaded or newComment'd keys
+        col["vote_rshares"] = F.when(
+            exists, _add(col["vote_rshares"], F.col("vote_delta"), dtype["vote_rshares"])
+        ).otherwise(col["vote_rshares"])
+        vote_ts = F.when(exists, F.col("vote_ts"))
+        for c, scale in (("score_trend", SCORE_TIMESCALE_TREND), ("score_hot", SCORE_TIMESCALE_HOT)):
+            col[c] = F.when(
+                vote_ts.isNotNull(), score(col["vote_rshares"], vote_ts, scale)
+            ).otherwise(col[c])
+    if flags["rewards"]:  # any key: a missing one is inserted
+        for c, d in (
+            ("total_payout_value", "payout"),
+            ("curator_payout_value", "curator_payout"),
+            ("beneficiaries_payout_value", "beneficiaries_payout"),
+        ):
+            col[c] = _add(col[c], F.col(d), dtype[c])
+        col["last_payout"] = F.coalesce(F.col("payout_ts"), col["last_payout"])
+        # authorReward resets (module docstring deviations)
+        author = F.col("author_reward") == 1
+        col["vote_rshares"] = F.when(author, F.lit(0).cast(_NUM)).otherwise(col["vote_rshares"])
+        for c in ("score_trend", "score_hot"):
+            col[c] = F.when(author, F.lit(0.0)).otherwise(col[c])
+        exists = exists | F.col("author_reward").isNotNull()
+    if flags["promotions"]:  # keys that exist by now: every row kept below
+        promotion = F.col("promotion")
+        col["promoted"] = _add(col["promoted"], promotion, dtype["promoted"])
+        col["score_promoted"] = F.when(
+            promotion.isNotNull(),
+            score(col["promoted"], col["created"], SCORE_TIMESCALE_TREND),
+        ).otherwise(col["score_promoted"])
+    return joined.filter(exists).select(*[col[c].alias(c) for c in posts.columns])
 
 
 # ---------------------------------------------------------------------------
 # setMute / setPostMute (engine_comments_contract_processor.py:33-49)
 # ---------------------------------------------------------------------------
 def apply_mutes(
-    state: dict[str, DataFrame], txs: DataFrame, present: bool | None = None
-) -> dict[str, DataFrame]:
+    state: dict[str, DataFrame], txs: DataFrame
+) -> tuple[dict[str, DataFrame], DataFrame]:
     mutes = txs.filter(F.col("action").isin("setMute", "setPostMute"))
-    if _skip(mutes, present):
-        return state
-    out = dict(state)
     # rewardPoolId -> token via token_config (small dim, broadcast)
     pool_map = F.broadcast(
         state["token_config"].select(
@@ -273,7 +397,7 @@ def apply_mutes(
         .join(pool_map, "pool_id")
         .select("name", F.col("pool_token").alias("symbol"), "muted", "seq")
     )
-    out["accounts"] = merge_upsert(
+    accounts = merge_upsert(
         state["accounts"], acct_mutes, ["name", "symbol"], seq_col="seq", update_cols=["muted"]
     )
     post_mutes = (
@@ -285,36 +409,50 @@ def apply_mutes(
             "seq",
         )
         .join(pool_map, "pool_id")
-        .select("authorperm", F.col("pool_token").alias("token"), "muted", "seq")
-        # only existing posts (reference checks get_token_post)
-        .join(state["posts"].select("authorperm", "token"), ["authorperm", "token"], "left_semi")
+        .withColumn("token", F.col("pool_token"))
     )
-    out["posts"] = merge_upsert(
-        out.get("posts", state["posts"]),
-        post_mutes,
-        ["authorperm", "token"],
-        seq_col="seq",
-        update_cols=["muted"],
-    )
-    return out
+    # applied to loaded posts only (the reference checks get_token_post)
+    return {"accounts": accounts}, _post_delta(post_mutes, mute=F.struct("seq", "muted"))
 
 
 # ---------------------------------------------------------------------------
 # newComment (engine_comments_contract_processor.py:56-74)
 # ---------------------------------------------------------------------------
+def _new_post_values(nc) -> dict:
+    """The columns a newComment sets on its post row, from the last
+    newComment struct ``nc``; counters, scores and last_payout restart."""
+    zero = F.lit(0).cast(_NUM)
+    return {
+        "author": nc["author"],
+        "created": nc["created"],
+        "cashout_time": nc["cashout_time"],
+        "main_post": F.lit(False),
+        "muted": nc["muted"],
+        "vote_rshares": zero,
+        "total_payout_value": zero,
+        "curator_payout_value": zero,
+        "promoted": zero,
+        "beneficiaries_payout_value": F.lit(0).cast("long"),
+        "children": F.lit(0),
+        "score_trend": F.lit(0.0),
+        "score_hot": F.lit(0.0),
+        "score_promoted": F.lit(0.0),
+        "last_payout": F.lit("1970-01-01 00:00:00").cast("timestamp"),
+    }
+
+
 def apply_new_comments(
-    state: dict[str, DataFrame], events: DataFrame, present: bool | None = None
-) -> dict[str, DataFrame]:
+    state: dict[str, DataFrame], events: DataFrame
+) -> tuple[dict[str, DataFrame], DataFrame]:
+    """``state["accounts"]`` must already hold this batch's setMute rows."""
     nc = events.filter(F.col("event") == "newComment")
-    if _skip(nc, present):
-        return state
     cfg = F.broadcast(
         state["token_config"].select("token", "cashout_window_days")
     )
     acct = state["accounts"].select(
         F.col("name"), F.col("symbol").alias("token"), F.col("muted").alias("acct_muted")
     )
-    delta = (
+    rows = (
         nc.select(
             F.col("payload_authorperm").alias("authorperm"),
             _payload("author").alias("author"),
@@ -328,55 +466,23 @@ def apply_new_comments(
             ["author", "token"],
             "left",
         )
-        .select(
-            "authorperm",
-            "author",
-            "created",
-            "token",
-            add_days(F.col("created"), F.coalesce(F.col("cashout_window_days"), F.lit(7))).alias(
-                "cashout_time"
-            ),
-            F.lit(False).alias("main_post"),
-            F.coalesce(F.col("acct_muted"), F.lit(False)).alias("muted"),
-            F.lit(0).cast(_NUM).alias("vote_rshares"),
-            F.lit(0).cast(_NUM).alias("total_payout_value"),
-            F.lit(0).cast(_NUM).alias("curator_payout_value"),
-            F.lit(0).cast(_NUM).alias("promoted"),
-            F.lit(0).cast("long").alias("beneficiaries_payout_value"),
-            F.lit(0).alias("children"),
-            F.lit(0.0).alias("score_trend"),
-            F.lit(0.0).alias("score_hot"),
-            F.lit(0.0).alias("score_promoted"),
-            F.lit("1970-01-01 00:00:00").cast("timestamp").alias("last_payout"),
-            "seq",
-        )
     )
-    out = dict(state)
-    out["posts"] = merge_upsert(
-        state["posts"],
-        delta,
-        ["authorperm", "token"],
-        seq_col="seq",
-        update_cols=[
-            "author", "created", "cashout_time", "main_post", "muted",
-            "vote_rshares", "total_payout_value", "curator_payout_value",
-            "promoted", "beneficiaries_payout_value", "children",
-            "score_trend", "score_hot", "score_promoted", "last_payout",
-        ],
+    cashout = add_days(F.col("created"), F.coalesce(F.col("cashout_window_days"), F.lit(7)))
+    muted = F.coalesce(F.col("acct_muted"), F.lit(False))
+    return {}, _post_delta(
+        rows, nc=F.struct("seq", "author", "created", cashout.alias("cashout_time"),
+                          muted.alias("muted")),
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
 # newVote / updateVote (engine_comments_contract_processor.py:75-115)
 # ---------------------------------------------------------------------------
 def apply_votes(
-    state: dict[str, DataFrame], events: DataFrame, present: bool | None = None
-) -> dict[str, DataFrame]:
+    state: dict[str, DataFrame], events: DataFrame
+) -> tuple[dict[str, DataFrame], DataFrame]:
     parsed = parse_vote_rows(events)
-    if _skip(parsed, present):
-        return state
-    votes, posts = state["votes"], state["posts"]
+    votes = state["votes"]
 
     # last vote per (authorperm, token, voter) in the batch
     w = Window.partitionBy("authorperm", "token", "voter").orderBy(F.desc("seq"))
@@ -384,80 +490,34 @@ def apply_votes(
 
     # net rshares delta per voter = last_in_batch - stored (0 if new voter);
     # intermediate in-batch updates cancel out exactly like the reference's
-    # sequential old_rshares reads (engine_comments_contract_processor.py:80-95)
+    # sequential old_rshares reads (engine_comments_contract_processor.py:80-95).
+    # The posts fold sums them per post and rescores at the last vote.
     stored = votes.select(
         "authorperm", "token", "voter", F.col("rshares").alias("old_rshares")
     )
-    deltas = last.join(stored, ["authorperm", "token", "voter"], "left").select(
-        "authorperm",
-        "token",
-        (F.col("rshares") - F.coalesce(F.col("old_rshares"), F.lit(0).cast(_NUM))).alias(
-            "rshares_delta"
-        ),
-        "timestamp",
-        "seq",
-    )
-    # salted two-phase fold: a viral post's entire vote batch would land on
-    # one reducer under a plain groupBy (operators/skew.py rationale)
-    per_post = hot_key_aggregate(
-        deltas,
-        ["authorperm", "token"],
-        {
-            "vote_rshares": ("rshares_delta", "sum"),
-            "last_vote_ts": ("timestamp", "max"),
-            "seq": ("seq", "max"),
-        },
-    ).withColumn("vote_rshares", F.col("vote_rshares").cast(_NUM))
-    # only posts that exist get the running sum + rescore
-    per_post = per_post.join(
-        posts.select("authorperm", "token"), ["authorperm", "token"], "left_semi"
-    )
-    new_posts = additive_merge(
-        posts, per_post.select("authorperm", "token", "vote_rshares"),
-        ["authorperm", "token"], add_cols=["vote_rshares"],
-    )
-    # rescore with the final rshares at the last vote event's timestamp
-    rescored = new_posts.join(
-        per_post.select("authorperm", "token", "last_vote_ts"),
-        ["authorperm", "token"],
-        "left",
-    ).withColumn(
-        "score_trend",
-        F.when(
-            F.col("last_vote_ts").isNotNull(),
-            score(F.col("vote_rshares"), F.col("last_vote_ts"), SCORE_TIMESCALE_TREND),
-        ).otherwise(F.col("score_trend")),
-    ).withColumn(
-        "score_hot",
-        F.when(
-            F.col("last_vote_ts").isNotNull(),
-            score(F.col("vote_rshares"), F.col("last_vote_ts"), SCORE_TIMESCALE_HOT),
-        ).otherwise(F.col("score_hot")),
-    ).drop("last_vote_ts")
+    deltas = last.join(stored, ["authorperm", "token", "voter"], "left")
+    rshares_delta = F.col("rshares") - F.coalesce(F.col("old_rshares"), F.lit(0).cast(_NUM))
 
-    out = dict(state)
-    out["votes"] = merge_upsert(
+    new_votes = merge_upsert(
         votes,
         last.select("authorperm", "voter", "timestamp", "token", "rshares", "percent", "seq"),
         ["authorperm", "token", "voter"],
         seq_col="seq",
     )
-    out["posts"] = rescored
-    return out
+    return {"votes": new_votes}, _post_delta(
+        deltas, vote_delta=rshares_delta, vote_ts=F.col("timestamp")
+    )
 
 
 # ---------------------------------------------------------------------------
 # reward events (engine_comments_contract_processor.py:116-214,277-304)
 # ---------------------------------------------------------------------------
 def apply_rewards(
-    state: dict[str, DataFrame], events: DataFrame, present: bool | None = None
-) -> dict[str, DataFrame]:
+    state: dict[str, DataFrame], events: DataFrame
+) -> tuple[dict[str, DataFrame], DataFrame]:
     r = events.filter(
         F.col("event").isin("curationReward", "beneficiaryReward", "authorReward")
     )
-    if _skip(r, present):
-        return state
-    posts, history = state["posts"], state["account_history"]
     q = F.col("quantity").cast(_NUM)
     parsed = r.select(
         F.col("authorperm"),
@@ -470,65 +530,14 @@ def apply_rewards(
         "seq",
         "ev_seq",
     )
-    # salted two-phase fold (same hot-authorperm rationale as apply_votes):
-    # all five aggregates are decomposable, conditional sums included
-    per_post = hot_key_aggregate(
+    # posts: payout sums, last_payout and the authorReward flag per post
+    post_rows = _post_delta(
         parsed,
-        ["authorperm", "token"],
-        {
-            "total_payout_value": ("q", "sum"),
-            "curator_payout_value": (
-                F.when(F.col("event") == "curationReward", F.col("q")), "sum"
-            ),
-            "beneficiaries_payout_value": (
-                F.when(F.col("event") == "beneficiaryReward", F.col("q")), "sum"
-            ),
-            "last_payout": ("timestamp", "max"),
-            "had_author_reward": (
-                F.when(F.col("event") == "authorReward", F.lit(1)).otherwise(F.lit(0)),
-                "max",
-            ),
-        },
-    ).select(
-        "authorperm",
-        "token",
-        F.col("total_payout_value").cast(_NUM).alias("total_payout_value"),
-        F.col("curator_payout_value").cast(_NUM).alias("curator_payout_value"),
-        F.col("beneficiaries_payout_value").cast("long").alias("beneficiaries_payout_value"),
-        "last_payout",
-        "had_author_reward",
-    )
-    new_posts = additive_merge(
-        posts,
-        per_post.select(
-            "authorperm", "token",
-            "total_payout_value", "curator_payout_value", "beneficiaries_payout_value",
-        ).fillna(0, ["curator_payout_value", "beneficiaries_payout_value"]),
-        ["authorperm", "token"],
-        add_cols=[
-            "total_payout_value", "curator_payout_value", "beneficiaries_payout_value",
-        ],
-    )
-    # last_payout + authorReward resets (see module docstring deviations)
-    flags = per_post.select("authorperm", "token", F.col("last_payout").alias("__lp"), "had_author_reward")
-    new_posts = (
-        new_posts.join(flags, ["authorperm", "token"], "left")
-        .withColumn("last_payout", F.coalesce(F.col("__lp"), F.col("last_payout")))
-        .withColumn(
-            "vote_rshares",
-            F.when(F.col("had_author_reward") == 1, F.lit(0).cast(_NUM)).otherwise(
-                F.col("vote_rshares")
-            ),
-        )
-        .withColumn(
-            "score_trend",
-            F.when(F.col("had_author_reward") == 1, F.lit(0.0)).otherwise(F.col("score_trend")),
-        )
-        .withColumn(
-            "score_hot",
-            F.when(F.col("had_author_reward") == 1, F.lit(0.0)).otherwise(F.col("score_hot")),
-        )
-        .drop("__lp", "had_author_reward")
+        payout=F.col("q"),
+        curator_payout=F.when(F.col("event") == "curationReward", F.col("q")),
+        beneficiaries_payout=F.when(F.col("event") == "beneficiaryReward", F.col("q")),
+        payout_ts=F.col("timestamp"),
+        author_reward=F.when(F.col("event") == "authorReward", F.lit(1)).otherwise(F.lit(0)),
     )
 
     # account_history append: one row per reward event with quantity > 0;
@@ -557,10 +566,7 @@ def apply_rewards(
         F.col("__order").alias("id"),
         "account", "token", "timestamp", "quantity", "trx", "type", "authorperm",
     )
-    out = dict(state)
-    out["posts"] = new_posts
-    out["account_history"] = history.unionByName(new_hist)
-    return out
+    return {"account_history": state["account_history"].unionByName(new_hist)}, post_rows
 
 
 # ---------------------------------------------------------------------------
@@ -568,11 +574,9 @@ def apply_rewards(
 # (engine_comments_contract_processor.py:215-274)
 # ---------------------------------------------------------------------------
 def apply_reward_pools(
-    state: dict[str, DataFrame], events: DataFrame, present: bool | None = None
-) -> dict[str, DataFrame]:
+    state: dict[str, DataFrame], events: DataFrame
+) -> tuple[dict[str, DataFrame], None]:
     p = events.filter(F.col("event").isin("createRewardPool", "updateRewardPool"))
-    if _skip(p, present):
-        return state
 
     def _cfg(col, typ):
         return F.get_json_object(F.col("payload"), f"$.config.{col}").cast(typ)
@@ -598,8 +602,7 @@ def apply_reward_pools(
         .withColumn("reward_pool_id", F.coalesce(F.col("new_pool_id"), F.col("old_pool_id")))
         .drop("new_pool_id", "old_pool_id")
     )
-    out = dict(state)
-    out["token_config"] = merge_upsert(
+    token_config = merge_upsert(
         state["token_config"],
         delta,
         ["token"],
@@ -611,7 +614,7 @@ def apply_reward_pools(
             "disable_downvoting", "ignore_decline_payout", "reward_pool_id",
         ],
     )
-    return out
+    return {"token_config": token_config}, None
 
 
 # ---------------------------------------------------------------------------
@@ -620,12 +623,9 @@ def apply_reward_pools(
 # routing stream_engine_sidechain_blocks.py:57-87)
 # ---------------------------------------------------------------------------
 def apply_promotions(
-    state: dict[str, DataFrame], txs: DataFrame, present: bool | None = None
-) -> dict[str, DataFrame]:
+    state: dict[str, DataFrame], txs: DataFrame
+) -> tuple[dict[str, DataFrame], DataFrame]:
     t = txs.filter((F.col("contract") == "tokens") & (F.col("action") == "transfer"))
-    if _skip(t, present):
-        return state
-    posts = state["posts"]
     promoted_accounts = F.broadcast(
         state["token_config"].select(
             F.col("token"), F.col("promoted_post_account").alias("to_account")
@@ -642,30 +642,6 @@ def apply_promotions(
         .filter(F.col("quantity").isNotNull() & (F.col("authorperm") != ""))
         .join(promoted_accounts, ["token", "to_account"], "inner")
     )
-    # salted fold like votes/rewards: one heavily-promoted post must not
-    # funnel every transfer through a single reducer
-    per_post = hot_key_aggregate(
-        parsed, ["authorperm", "token"], {"promoted": ("quantity", "sum")}
-    ).withColumn("promoted", F.col("promoted").cast(_NUM))
-    # only existing (authorperm, token) rows are promoted
-    per_post = per_post.join(
-        posts.select("authorperm", "token"), ["authorperm", "token"], "left_semi"
-    )
-    if per_post.isEmpty():
-        return state
-    new_posts = additive_merge(posts, per_post, ["authorperm", "token"], add_cols=["promoted"])
-    promoted_aps = per_post.select("authorperm", "token").withColumn("__p", F.lit(1))
-    new_posts = (
-        new_posts.join(promoted_aps, ["authorperm", "token"], "left")
-        .withColumn(
-            "score_promoted",
-            F.when(
-                F.col("__p") == 1,
-                score(F.col("promoted"), F.col("created"), SCORE_TIMESCALE_TREND),
-            ).otherwise(F.col("score_promoted")),
-        )
-        .drop("__p")
-    )
-    out = dict(state)
-    out["posts"] = new_posts
-    return out
+    # promoted += quantity and a rescore, for posts that exist after the
+    # batch's rewards (the posts fold)
+    return {}, _post_delta(parsed, promotion=F.col("quantity"))

@@ -43,7 +43,7 @@ def tracked_persist(df: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # batch scope: an ingest batch's new state is a set of lazy plans that share
-# upstream work (the DMP body fold, the chained posts merges), and every
+# upstream work (the DMP body fold, the L1 posts chain), and every
 # table write or probe would otherwise re-run the shared part. The
 # processors persist each frame that more than one action of the batch
 # reads; the runner opens one scope per batch and unpersists those frames

@@ -41,12 +41,14 @@ stages and swaps 2 partition directories, never the table.
 Per batch, shared work runs once and unchanged tables are not written:
 
 - A batch's new state is a set of lazy plans that share upstream work.
-  The processors persist each frame more than one of the batch's actions
-  reads (the DMP body fold of L1 comments, and the chained posts merges
-  read by the reblog and promotion folds), and every later action reads
-  the cached copy. The batch's ``session.batch_scope`` unpersists them
-  once the state swap has committed; the scope is per thread, since the
-  L1 and L2 streams run ``foreachBatch`` concurrently.
+  An L2 batch folds posts in one keyed pass (one aggregate over every
+  family's per-post rows, one join with the loaded posts), so no action
+  re-reads a shared frame and it caches nothing. An L1 batch persists
+  each frame more than one of its actions reads (the DMP body fold of
+  comments, and the posts chain read by the reblog fold), and every later
+  action reads the cached copy. The batch's ``session.batch_scope``
+  unpersists them once the state swap has committed; the scope is per
+  thread, since the L1 and L2 streams run ``foreachBatch`` concurrently.
 - Only tables whose frame is not the loaded one are staged: an L2 batch
   without reward pools leaves follows, reblogs and token_config as they
   are on disk.

@@ -17,7 +17,8 @@ deserialized per batch. Each key stores only the voter's last rshares and
 expires after a TTL (votes stop mattering after the cashout window —
 reference: sql/engine.sql cashout_time). The operator emits per-voter
 DELTAS; the per-post running total is a downstream additive merge exactly
-like the batch path (processors/l2.py apply_votes -> additive_merge).
+like the batch path (processors/l2.py: apply_votes' per-voter deltas,
+summed per post by the posts fold and added as additive_merge adds).
 """
 
 from __future__ import annotations

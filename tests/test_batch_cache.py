@@ -15,7 +15,7 @@ from decimal import Decimal
 from pyspark.sql import functions as F
 
 from distribution_engine_smt_spark import schemas, session, tables
-from distribution_engine_smt_spark.processors import apply_l1_batch, apply_l2_batch, l1, l2
+from distribution_engine_smt_spark.processors import apply_l1_batch, apply_l2_batch
 from distribution_engine_smt_spark.streaming import DualStreamRunner
 from distribution_engine_smt_spark.streaming.runner import _checkpoint_row
 
@@ -147,19 +147,21 @@ def test_runner_batches_equal_direct_processors_and_leak_no_cache(
     cache = spark._jsparkSession.sharedState().cacheManager()
     session.release_caches(spark)
     persisted = []
+    frames = type(spark.range(1))  # the session's concrete DataFrame class
+    persist = frames.persist
 
-    def counting(df):
+    def counting(df, *a, **k):
         persisted.append(df)
-        return session.batch_persist(df)
+        return persist(df, *a, **k)
 
-    monkeypatch.setattr(l1, "batch_persist", counting)
-    monkeypatch.setattr(l2, "batch_persist", counting)
+    monkeypatch.setattr(frames, "persist", counting)
 
     runner = DualStreamRunner(spark, str(tmp_path))
     runner.save_state(_seed_state(spark))
     root = str(tmp_path)
 
-    # L2: the posts chain is cached for the promotion probe, then released
+    # L2: the posts fold is one plan that each action reads once: nothing
+    # is cached
     txs = _l2_batch(spark)
     b, t = _head(txs, "blockNumber")
     exp = _expected(runner.load_state(), apply_l2_batch, txs,
@@ -169,7 +171,7 @@ def test_runner_batches_equal_direct_processors_and_leak_no_cache(
     untouched = {n: _digests(root, n) for n in ("follows", "reblogs", "token_config")}
     assert all(untouched.values())
     runner.process_l2_batch(txs, 0, now=NOW)
-    assert persisted, "the L2 batch cached no shared frame"
+    assert not persisted, "the L2 batch cached a frame"
     assert cache.isEmpty()
     _assert_state(runner, exp)
     for name, digests in untouched.items():

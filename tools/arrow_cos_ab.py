@@ -21,6 +21,7 @@ sys.path.insert(0, ROOT)
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.types import DoubleType  # noqa: E402
 
 from distribution_engine_smt_spark.pipeline.similarity import (  # noqa: E402
     NEARDUP_COSINE,
@@ -30,7 +31,9 @@ from distribution_engine_smt_spark.session import get_spark, release_caches  # n
 from distribution_engine_smt_spark.tables import load_tpch  # noqa: E402
 
 
-@F.pandas_udf("double")
+# a DataType, not a DDL string: parsing "double" needs an active session,
+# and this decorator runs at import
+@F.pandas_udf(DoubleType())
 def _pcos(a: pd.Series, b: pd.Series) -> pd.Series:
     # dim-sequential accumulation: acc_j+1 = acc_j + x_j*y_j per pair,
     # vectorized ACROSS pairs — the identical IEEE sequence to the JVM
