@@ -5,8 +5,22 @@ All pure Column expressions — JVM-side, codegen-friendly.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+_SQL_WORD = re.compile(r"[A-Za-z0-9_]+")
+
+
+def sql_word(value: str) -> str:
+    """``value`` unchanged if it is a plain word (letters, digits,
+    underscore) and so safe to splice into Spark SQL text as a quoted
+    literal or a backticked name; ``ValueError`` otherwise — a quote,
+    backtick or space in spliced text would change the statement."""
+    if not _SQL_WORD.fullmatch(value):
+        raise ValueError(f"not a plain SQL word: {value!r}")
+    return value
 
 
 def construct_authorperm(author: Column, permlink: Column) -> Column:

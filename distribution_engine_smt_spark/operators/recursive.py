@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import sql_word
+
 
 def expand_tree(
     edges: DataFrame,
@@ -37,6 +39,7 @@ def expand_tree(
     frontier materialization, so the whole walk is max_depth small jobs
     with no lineage blow-up.
     """
+    relink = f"`{sql_word(id_col)}` AS `{sql_word(parent_col)}`"
     edges = edges.select(F.col(id_col), F.col(parent_col))
     edges.persist()
     frontier = roots.select(F.col(id_col)).distinct().withColumn("depth", F.lit(0))
@@ -49,7 +52,7 @@ def expand_tree(
             children = (
                 edges.join(
                     F.broadcast(
-                        frontier.selectExpr(f"{id_col} AS {parent_col}")
+                        frontier.selectExpr(relink)
                     ),
                     on=parent_col,
                     how="inner",

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..driver_queries import _t, memoize_df, register
+from ..functions.text import sql_word
 from ..session import tracked_persist
 from .textstats import STOPWORDS, _STOP_SQL, tokens
 
@@ -558,11 +559,8 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays two MATERIALIZED pair tables instead of re-running either
     derivation; the oracle re-derives both from scratch, keeping both
     stores hash-checked."""
-    import os as _os
-
-    from ..operators import storage as _storage
     from ..session import tracked_persist
-    from .dedup import dedup_minhash_lsh, dedup_ngram_jaccard
+    from .dedup import dedup_ngram_jaccard, lsh_pairs
 
     # re-register the memoized chains for caching on every call: the
     # bench protocol clearCache()s between queries, which drops not just
@@ -570,12 +568,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single aggregate below would re-derive each chain per action.
     # (persist on an already-registered frame is a no-op.)
     t = tracked_persist(dedup_ngram_jaccard(spark, sf_dir)).select("d1", "d2")
-    _ppath = _storage.pair_store_path(sf_dir)
-    l = tracked_persist(
-        _storage.read_dedup_pairs(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else dedup_minhash_lsh(spark, sf_dir)
-    ).select("d1", "d2")
+    l = tracked_persist(lsh_pairs(spark, sf_dir)).select("d1", "d2")
     # one full-outer pass references each chain exactly ONCE in the plan
     # (separate count branches would compute the baseline chain twice
     # per action) and yields all three counts in a single aggregate
@@ -891,7 +884,9 @@ def index_occupancy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_doc = corpus_count(spark, sf_dir, "documents")
 
     def stats(szdf: DataFrame, structure: str, n_items: int, width: int):
-        # one-parse SQL text (r13): same trees as the old Column-DSL agg
+        # one-parse SQL text (r13): same trees as the old Column-DSL agg;
+        # spliced values are checked, never trusted
+        structure, n_items, width = sql_word(structure), int(n_items), int(width)
         return szdf.agg(
             F.expr("count(*) AS n_buckets"),
             F.expr("sum(sz) AS n_rows"),
@@ -1185,26 +1180,13 @@ def lsh_recall_audit_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the sample predicate pushes into the probe side of the
     self-join (one md5 per posting row, no extra pass); baseline cost
     scales with p * corpus, never the corpus squared."""
-    import os as _os
-
-    from ..operators import storage as _storage
     from ..session import tracked_persist
-    from .dedup import (
-        audit_sample_pred,
-        dedup_minhash_lsh,
-        jaccard_pairs_sampled,
-    )
+    from .dedup import audit_sample_pred, jaccard_pairs_sampled, lsh_pairs
 
     t = tracked_persist(jaccard_pairs_sampled(spark, sf_dir)).select("d1", "d2")
     # LSH side store-read when built, like the full audit (VERDICT r10 #5)
-    _ppath = _storage.pair_store_path(sf_dir)
-    _lsh = (
-        _storage.read_dedup_pairs(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else dedup_minhash_lsh(spark, sf_dir)
-    )
     l = tracked_persist(
-        _lsh.filter(audit_sample_pred(F.col("d1")))
+        lsh_pairs(spark, sf_dir).filter(audit_sample_pred(F.col("d1")))
     ).select("d1", "d2")
     j = t.withColumn("in_t", F.lit(1)).join(
         l.withColumn("in_l", F.lit(1)), ["d1", "d2"], "full_outer"

@@ -661,8 +661,6 @@ def ann_ivf_sharded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     longer runs at query time. Results are identical by construction
     (the store build runs this exact derivation once) and the oracle is
     unchanged."""
-    import os as _os
-
     from ..operators import storage as _storage
     from .similarity import dot_fold_sql
 
@@ -676,11 +674,7 @@ def ann_ivf_sharded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             acc = acc + (x - y) * (x - y)
         return acc
 
-    meta = (
-        _storage.load_sharded_ivf_meta(sf_dir)
-        if _os.path.isdir(_storage.sharded_ivf_store_path(sf_dir))
-        else None
-    )
+    meta = _storage.load_sharded_ivf_meta(sf_dir)
     if meta is not None:
         cents1, level2 = meta
         q_cid = min(range(len(cents1)), key=lambda i: (d2(cents1[i]), i))
@@ -860,8 +854,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT terms in subspace order; ties break on vec_id. The oracle replays
     fit + routing + encode + ADC + rerank once per ladder rung behind
     in-SQL rung guards."""
-    import os
-
     from ..operators import storage
     from .similarity import (
         PQ_TOP,
@@ -884,10 +876,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return acc
 
     sel = sorted(range(len(cents)), key=lambda i: (d2(cents[i]), i))[:NPROBE]
-    path = storage.ivfpq_code_store_path(sf_dir, len(cents))
-    if os.path.isdir(path):
-        codes = storage.read_ivfpq_codes(spark, path)
-    else:
+    codes = storage.read_ivfpq_codes(spark, sf_dir, len(cents))
+    if codes is None:
         codes = pq_codes_frame(spark, sf_dir).join(asg, "vec_id")
     lut = pq_query_lut(seeds, q_vec)
     cand = tracked_persist(

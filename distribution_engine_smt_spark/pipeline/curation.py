@@ -281,14 +281,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (the labels are a pure function of the pairs) even the
     sequential 8-round propagation is skipped — one parquet read.
     """
-    import os
-
     from ..operators import storage
     from .dedup import dedup_pairs_with_sources
 
-    cpath = storage.cluster_store_path(sf_dir)
-    if os.path.isdir(cpath):
-        return spark.read.parquet(cpath).orderBy(F.col("doc_id").asc())
+    stored = storage.read_dedup_clusters(spark, sf_dir)
+    if stored is not None:
+        return stored.orderBy(F.col("doc_id").asc())
     return cluster_labels(dedup_pairs_with_sources(spark, sf_dir).select("d1", "d2"))
 
 

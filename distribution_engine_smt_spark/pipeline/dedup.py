@@ -71,6 +71,14 @@ def _shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("g"))
 
 
+def _shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, g) from the postings store when built, else derived."""
+    from ..operators import storage
+
+    stored = storage.read_shingle_postings(spark, sf_dir)
+    return _shingle_df(spark, sf_dir) if stored is None else stored
+
+
 # ---------------------------------------------------------------------------
 # exact dedup: hash-groupBy
 # ---------------------------------------------------------------------------
@@ -133,20 +141,11 @@ def _jaccard_pairs_impl(
     sizes stay corpus-wide (cap semantics don't change under sampling),
     so the result equals the full pair set filtered on d1, at ~p of the
     self-join cost."""
-    import os as _os
-
-    from ..operators import storage as _storage
-
     # persist: referenced by the df-cap pass AND (via sh) sizes + both join
     # sides — without caching the shingle build re-runs 4x. Store-aware:
     # with the materialized postings store this is a columnar read, not
     # the corpus explode + array_distinct pass (same rows by construction)
-    _ppath = _storage.postings_store_path(sf_dir)
-    sh_all = tracked_persist(
-        _storage.read_shingle_postings(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else _shingle_df(spark, sf_dir)
-    )
+    sh_all = tracked_persist(_shingle_postings(spark, sf_dir))
     # stop-shingle cap: drop hot shingles (df > SHINGLE_DF_CAP) before any
     # size or intersection math — bounds every posting list the self-join
     # sees; the oracle applies the identical cap
@@ -267,14 +266,12 @@ def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch a 100 TB dedup pipeline computes once at ingest and every
     signature consumer (LSH banding, decontamination agreement scans)
     reads back — the corpus-wide min-agg never re-runs per query."""
-    import os
-
     from ..operators import storage
 
     n_hashes, _, _ = minhash_widths(spark, sf_dir)
-    path = storage.signature_store_path(sf_dir, n_hashes)
-    if os.path.isdir(path):
-        return storage.read_minhash_signatures(spark, path, n_hashes)
+    stored = storage.read_minhash_signatures(spark, sf_dir, n_hashes)
+    if stored is not None:
+        return stored
     sh = _shingle_df(spark, sf_dir)
     return sh.groupBy("doc_id").agg(*_minhash_aggs(n_hashes))
 
@@ -389,16 +386,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one shingle pass feeds verification and sizes; with a materialized
     # postings store (the stored half of the near-dup index) this is a
     # columnar read instead of the corpus explode + array_distinct pass
-    import os as _os
-
-    from ..operators import storage as _storage
-
-    _ppath = _storage.postings_store_path(sf_dir)
-    sh = tracked_persist(
-        _storage.read_shingle_postings(spark, _ppath)
-        if _os.path.isdir(_ppath)
-        else _shingle_df(spark, sf_dir)
-    )
+    sh = tracked_persist(_shingle_postings(spark, sf_dir))
     # persist: the band fan-out references sig 4x and the bucket self-join
     # doubles that — without caching the signature aggregation re-runs 8x.
     # minhash_signature is store-aware: with a materialized signature
@@ -1082,6 +1070,15 @@ def run_pair_store_stream(
     )
 
 
+def lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The verified LSH pairs (d1, d2, jaccard, ...): the pair store's rows
+    when built, else the live ``dedup_minhash_lsh`` chain."""
+    from ..operators import storage
+
+    stored = storage.read_dedup_pairs(spark, sf_dir)
+    return dedup_minhash_lsh(spark, sf_dir) if stored is None else stored
+
+
 def dedup_pairs_with_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs with both sides' sources resolved:
     (d1, d2, jaccard, s1, s2).
@@ -1095,13 +1092,11 @@ def dedup_pairs_with_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     source data + sketch params, so it can't serve stale pairs. In the
     derived path the PAIRS broadcast into the doc->source lookups (never
     the reverse — documents is the 100 TB side)."""
-    import os
-
     from ..operators import storage
 
-    path = storage.pair_store_path(sf_dir)
-    if os.path.isdir(path):
-        return storage.read_dedup_pairs(spark, path)
+    stored = storage.read_dedup_pairs(spark, sf_dir)
+    if stored is not None:
+        return stored
     pairs = dedup_minhash_lsh(spark, sf_dir)
     docs = _t(spark, sf_dir)["documents"].select("doc_id", "source")
     wa = docs.select(F.col("doc_id").alias("d1"), F.col("source").alias("s1")).join(

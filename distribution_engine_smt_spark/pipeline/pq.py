@@ -480,8 +480,6 @@ def ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~64x narrower table. Query vectors (vec_id < BATCH_Q) are excluded
     from results corpus-side. Determinism: same fold/argmin/tie-break
     contracts as ann_ivfpq_topk, replayed per ladder rung in the oracle."""
-    import os
-
     from pyspark.sql import Window
 
     from ..operators import storage
@@ -506,10 +504,8 @@ def ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         for q in range(BATCH_Q)
     }
     cells = sorted({c for cs in sel.values() for c in cs})
-    path = storage.ivfpq_code_store_path(sf_dir, len(cents))
-    if os.path.isdir(path):
-        codes = storage.read_ivfpq_codes(spark, path)
-    else:
+    codes = storage.read_ivfpq_codes(spark, sf_dir, len(cents))
+    if codes is None:
         codes = pq_codes_frame(spark, sf_dir).join(asg, "vec_id")
     probed = codes.where(
         F.col("cid").isin(cells) & (F.col("vec_id") >= BATCH_Q)

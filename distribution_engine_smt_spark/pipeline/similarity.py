@@ -508,15 +508,11 @@ def rhp_band_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     width (operators/storage.py build_rhp_band_store): the L x K
     sign-pattern folds are the dominant cost of every RHP consumer, and
     a 100 TB pipeline computes them once at ingest."""
-    import os
-
     from ..operators import storage
 
     bits = rhp_bits_for(corpus_count(spark, sf_dir, "embeddings"))
-    path = storage.rhp_band_store_path(sf_dir, bits)
-    if os.path.isdir(path):
-        return storage.read_rhp_bands(spark, path)
-    return rhp_band_frame_at(spark, sf_dir, bits)
+    stored = storage.read_rhp_bands(spark, sf_dir, bits)
+    return rhp_band_frame_at(spark, sf_dir, bits) if stored is None else stored
 
 
 def rhp_band_frame_at(spark: SparkSession, sf_dir: str, bits: int) -> DataFrame:
@@ -1388,13 +1384,11 @@ def pq_codes_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/storage.py build_pq_code_store): encoding is the whole
     per-query cost of the ADC scan, and a 100 TB pipeline encodes once
     at ingest — every query reads the narrow code columns back."""
-    import os
-
     from ..operators import storage
 
-    path = storage.pq_code_store_path(sf_dir)
-    if os.path.isdir(path):
-        return storage.read_pq_codes(spark, path)
+    stored = storage.read_pq_codes(spark, sf_dir)
+    if stored is not None:
+        return stored
     emb = _t(spark, sf_dir)["embeddings"]
     return pq_encode(emb, pq_seed_vectors(spark, sf_dir))
 

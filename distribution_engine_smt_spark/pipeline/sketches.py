@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..driver_queries import _t, register
+from ..functions.text import sql_word
 
 # --- HyperLogLog layout -----------------------------------------------------
 # 60-bit md5 prefix (15 hex chars): low P bits pick the register, the
@@ -222,6 +223,7 @@ def salted_positions(col, prefix: str, depth: int, width: int):
 def salted_positions_sql(col: str, prefix: str, depth: int, width: int) -> str:
     """Spark-SQL text twin of ``salted_positions`` (one parse;
     canonicalized-plan equality pinned in tests/test_sql_expr_parity.py)."""
+    prefix = sql_word(prefix)
     terms = ", ".join(
         "pmod("
         + _HV_SQL.format(

@@ -74,14 +74,18 @@ from .stateful import vote_delta_stream
 HEAD_DELAY_SECONDS = 15  # reference: stream_blocks.py:82
 
 
+def _head_delay_cond(now: datetime | None = None, ts_col: str = "timestamp"):
+    """ST1 predicate: the op is at least 15 s old at ``now`` (default: the
+    current UTC time)."""
+    now = now or datetime.now(timezone.utc).replace(tzinfo=None)
+    return F.col(ts_col) <= F.timestamp_add("SECOND", F.lit(-HEAD_DELAY_SECONDS), F.lit(now))
+
+
 def head_delay_filter(
     ops: DataFrame, ts_col: str = "timestamp", now: datetime | None = None
 ) -> DataFrame:
     """ST1: refuse ops younger than 15 s (freshness floor)."""
-    now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-    return ops.filter(
-        F.col(ts_col) <= F.timestamp_add("SECOND", F.lit(-HEAD_DELAY_SECONDS), F.lit(now))
-    )
+    return ops.filter(_head_delay_cond(now, ts_col))
 
 
 def l2_alignment_bound(state: dict[str, DataFrame]):
@@ -304,10 +308,7 @@ class DualStreamRunner:
         hwm = cfg.get(1, {}).get("last_streamed_block")
         if hwm is not None:
             ops = ops.filter(F.col("block_num") > F.lit(hwm))
-        now_ = now or datetime.now(timezone.utc).replace(tzinfo=None)
-        cond = F.col("timestamp") <= F.timestamp_add(
-            "SECOND", F.lit(-HEAD_DELAY_SECONDS), F.lit(now_)
-        )
+        cond = _head_delay_cond(now)
         bound = cfg.get(2, {}).get("last_engine_streamed_timestamp")
         if bound is not None:
             # L2 leads: only ops strictly older than the L2 clock commit
@@ -336,11 +337,7 @@ class DualStreamRunner:
         hwm = cfg.get(2, {}).get("last_engine_streamed_block")
         if hwm is not None:
             txs = txs.filter(F.col("blockNumber") > F.lit(hwm))
-        now_ = now or datetime.now(timezone.utc).replace(tzinfo=None)
-        cond = F.col("timestamp") <= F.timestamp_add(
-            "SECOND", F.lit(-HEAD_DELAY_SECONDS), F.lit(now_)
-        )
-        eligible, parked = self._eligibility_split(txs, cond)
+        eligible, parked = self._eligibility_split(txs, _head_delay_cond(now))
         if eligible.isEmpty():
             self._save_holdback("l2", parked)
             return
@@ -517,6 +514,14 @@ def _file_stream(spark: SparkSession, path: str, schema) -> DataFrame:
     )
 
 
+def _start(writer, trigger: dict | None, available_now: bool):
+    """Start a stream writer: the ``availableNow`` catch-up pass, or the
+    given trigger (default a 3 s processing-time cadence)."""
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(**(trigger or {"processingTime": "3 seconds"})).start()
+
+
 def run_l1_stream(
     runner: DualStreamRunner,
     source_path: str,
@@ -530,11 +535,7 @@ def run_l1_stream(
     writer = stream.writeStream.foreachBatch(runner.process_l1_batch).option(
         "checkpointLocation", os.path.join(runner.root, "checkpoints", "l1")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**(trigger or {"processingTime": "3 seconds"}))
-    return writer.start()
+    return _start(writer, trigger, available_now)
 
 
 def run_l2_stream(
@@ -548,11 +549,7 @@ def run_l2_stream(
     writer = stream.writeStream.foreachBatch(runner.process_l2_batch).option(
         "checkpointLocation", os.path.join(runner.root, "checkpoints", "l2")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**(trigger or {"processingTime": "3 seconds"}))
-    return writer.start()
+    return _start(writer, trigger, available_now)
 
 
 def run_l2_vote_stream(
@@ -585,8 +582,4 @@ def run_l2_vote_stream(
         .outputMode("update")
         .option("checkpointLocation", os.path.join(runner.root, "checkpoints", "l2votes"))
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(**(trigger or {"processingTime": "3 seconds"}))
-    return writer.start()
+    return _start(writer, trigger, available_now)

@@ -591,8 +591,8 @@ def probe_rung_crossing(spark) -> dict:
     _dq._DF_CACHE.clear()
     spark.catalog.clearCache()
 
-    def cpp(path):
-        bands = _st.read_rhp_bands(spark, path)
+    def cpp(bits):
+        bands = _st.read_rhp_bands(spark, d, bits)
         sz = bands.groupBy("tbl", "bucket").agg(F.count("*").alias("sz"))
         row = sz.agg(
             F.sum(F.col("sz") * F.col("sz")).alias("s2"),
@@ -608,11 +608,11 @@ def probe_rung_crossing(spark) -> dict:
     t0 = time.perf_counter()
     p12 = _st.build_rhp_band_store(spark, d, bits=12)
     out["build_at_12_sec"] = round(time.perf_counter() - t0, 2)
-    out["at_12_bits"] = cpp(p12)
+    out["at_12_bits"] = cpp(12)
     t0 = time.perf_counter()
     p13 = _st.migrate_rhp_band_store(spark, d, p12, 13)
     out["migrate_12_to_13_sec"] = round(time.perf_counter() - t0, 2)
-    out["at_13_bits"] = cpp(p13)
+    out["at_13_bits"] = cpp(13)
     out["cand_ratio_13_vs_12"] = round(
         out["at_13_bits"]["cand_per_probe"]
         / max(out["at_12_bits"]["cand_per_probe"], 1e-9),

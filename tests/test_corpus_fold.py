@@ -73,7 +73,7 @@ def test_ingest_fold_migrate_lifecycle(spark, store_dir, tmp_path):
         str(tmp_path / "ck"),
     )
     q.awaitTermination(120)
-    assert storage.read_rhp_bands(spark, path).count() == (
+    assert storage.read_rhp_bands(spark, corpus, bits0).count() == (
         (n0 + 2) * RHP_TABLES
     )
 
@@ -116,7 +116,7 @@ def test_ingest_fold_migrate_lifecycle(spark, store_dir, tmp_path):
     assert storage.rhp_store_bits(migrated_path) == bits0 + 1
     got = sorted(
         (r["vec_id"], r["tbl"], r["bucket"])
-        for r in storage.read_rhp_bands(spark, migrated_path).collect()
+        for r in storage.read_rhp_bands(spark, corpus, bits0 + 1).collect()
     )
     want = sorted(
         (r["vec_id"], r["tbl"], r["bucket"])
@@ -182,7 +182,7 @@ def test_ivfpq_ingest_fold_refit_lifecycle(spark, store_dir, tmp_path):
         spark, str(incoming), schema, path, cents, seeds, ckpt
     )
     q2.awaitTermination(120)
-    assert storage.read_ivfpq_codes(spark, path).count() == n0 + 2
+    assert storage.read_ivfpq_codes(spark, corpus, k0).count() == n0 + 2
 
     # before the fold: refit REFUSES (streamed vectors would be dropped)
     with pytest.raises(ValueError, match="fold"):
@@ -211,7 +211,7 @@ def test_ivfpq_ingest_fold_refit_lifecycle(spark, store_dir, tmp_path):
     # ladder width, every vector re-encoded — equals a from-scratch build
     refit = storage.refit_ivfpq_code_store(spark, corpus, new_path)
     assert refit != new_path and not os.path.isdir(new_path)
-    codes = storage.read_ivfpq_codes(spark, refit)
+    codes = storage.read_ivfpq_codes(spark, corpus, storage.ivfpq_store_k(refit))
     # occupancy: one code row per corpus vector, folded vectors included
     assert codes.count() == n0 + 2
     assert codes.select("vec_id").distinct().count() == n0 + 2

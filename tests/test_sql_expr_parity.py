@@ -377,3 +377,25 @@ def test_pq_kernels_plan_and_values(spark):
     newa = codes.selectExpr(pq_adc_expr(lut) + " AS adc")
     assert _canon(olda) == _canon(newa)
     assert olda.collect() == newa.collect()
+
+
+def test_spliced_sql_words_reject_quote_bearing_values(spark):
+    """Values spliced into SQL text are checked: a quote, backtick or
+    space raises instead of changing the statement."""
+    import pytest
+
+    from distribution_engine_smt_spark.functions.text import sql_word
+    from distribution_engine_smt_spark.operators.recursive import expand_tree
+    from distribution_engine_smt_spark.pipeline.sketches import (
+        salted_positions_sql,
+    )
+
+    assert sql_word("rhp_lsh") == "rhp_lsh"
+    for bad in ("cms'", "a b", "x`y", ""):
+        with pytest.raises(ValueError):
+            sql_word(bad)
+    with pytest.raises(ValueError):
+        salted_positions_sql("tok", "cms', '", 4, 512)
+    edges = spark.createDataFrame([(1, 0)], "id INT, parent INT")
+    with pytest.raises(ValueError):
+        expand_tree(edges, edges, "id", "parent` AS x, `id")

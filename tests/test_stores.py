@@ -42,7 +42,7 @@ def test_pair_store_matches_derived(spark, store_dir):
     derived = dedup_minhash_lsh(spark, SF_DIR).collect()
     assert derived, "sf0.001 corpus yields no near-dup pairs; test is vacuous"
     path = storage.build_dedup_pair_store(spark, SF_DIR)
-    stored = storage.read_dedup_pairs(spark, path).collect()
+    stored = storage.read_dedup_pairs(spark, SF_DIR).collect()
     assert _pairs_key(stored) == _pairs_key(derived)
     # sources resolved correctly: spot-check against the documents table
     src = {
@@ -163,8 +163,8 @@ def test_kmeans_store_roundtrip_and_short_circuit(spark, store_dir, monkeypatch)
 
 
 def test_stranded_build_tmp_is_invisible_to_consumers(spark, store_dir):
-    """A crash mid-build leaves only a dot-prefixed tmp dir; consumers'
-    os.path.isdir(store_path) check never sees it, so they fall back to
+    """A crash mid-build leaves only a dot-prefixed tmp dir; the store
+    reads look only at the published path, so consumers fall back to
     derivation instead of reading partial state."""
     import pathlib
 
@@ -219,7 +219,7 @@ def test_rhp_band_store_matches_derived(spark, store_dir):
 
     derived = rhp_band_frame(spark, SF_DIR).collect()  # no store yet
     path = storage.build_rhp_band_store(spark, SF_DIR)
-    stored = storage.read_rhp_bands(spark, path).collect()
+    stored = storage.read_rhp_bands(spark, SF_DIR, storage.rhp_store_bits(path)).collect()
     assert _bands_key(stored) == _bands_key(derived)
     # the store records the build width, and it matches the ladder
     bits = rhp_bits_for(corpus_count(spark, SF_DIR, "embeddings"))
@@ -263,7 +263,7 @@ def test_rhp_band_stream_increments_and_restart(spark, store_dir, tmp_path):
     )
 
     path = storage.build_rhp_band_store(spark, SF_DIR)
-    base = storage.read_rhp_bands(spark, path).count()
+    base = storage.read_rhp_bands(spark, SF_DIR, storage.rhp_store_bits(path)).count()
     emb = tables.load_tpch(spark, SF_DIR)["embeddings"]
     v0 = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
 
@@ -289,7 +289,7 @@ def test_rhp_band_stream_increments_and_restart(spark, store_dir, tmp_path):
     q.awaitTermination(120)
     from distribution_engine_smt_spark.pipeline.similarity import RHP_TABLES
 
-    after1 = storage.read_rhp_bands(spark, path)
+    after1 = storage.read_rhp_bands(spark, SF_DIR, storage.rhp_store_bits(path))
     assert after1.count() == base + RHP_TABLES
     # a clone of vec 0 must share vec 0's bucket in EVERY table (same
     # planes, same width -> identical sign pattern)
@@ -307,7 +307,7 @@ def test_rhp_band_stream_increments_and_restart(spark, store_dir, tmp_path):
     wave(incoming / "w2.parquet", [(300_001, v0)])
     q2 = run_rhp_band_stream(spark, str(incoming), schema, path, ckpt)
     q2.awaitTermination(120)
-    after2 = storage.read_rhp_bands(spark, path)
+    after2 = storage.read_rhp_bands(spark, SF_DIR, storage.rhp_store_bits(path))
     assert after2.count() == base + 2 * RHP_TABLES
     assert after2.where("vec_id = 300000").count() == RHP_TABLES
 
@@ -330,7 +330,7 @@ def test_pq_code_store_matches_derived(spark, store_dir):
     path = storage.build_pq_code_store(spark, SF_DIR)
     stored = sorted(
         tuple(r[c] for c in ["vec_id"] + [f"c{s}" for s in range(PQ_S)])
-        for r in storage.read_pq_codes(spark, path).collect()
+        for r in storage.read_pq_codes(spark, SF_DIR).collect()
     )
     assert stored == derived
     assert storage.build_pq_code_store(spark, SF_DIR) == path  # no-op rebuild
@@ -376,11 +376,11 @@ def test_ivfpq_code_store_matches_derived_and_prunes(spark, store_dir):
     path = storage.build_ivfpq_code_store(spark, SF_DIR)
     stored = sorted(
         tuple(r[c] for c in cols)
-        for r in storage.read_ivfpq_codes(spark, path).collect()
+        for r in storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path)).collect()
     )
     assert stored == derived
     assert storage.build_ivfpq_code_store(spark, SF_DIR) == path
-    df = storage.read_ivfpq_codes(spark, path)
+    df = storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path))
     one = df.select("cid").first()["cid"]
     plan = (
         df.where(df["cid"] == one)
@@ -425,7 +425,7 @@ def test_ivfpq_ingest_stream_increments_and_restart(spark, store_dir, tmp_path):
     )
 
     path = storage.build_ivfpq_code_store(spark, SF_DIR)
-    base = storage.read_ivfpq_codes(spark, path).count()
+    base = storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path)).count()
     _, cents = kmeans_fit(spark, SF_DIR)
     seeds = pq_seed_vectors(spark, SF_DIR)
     emb = tables.load_tpch(spark, SF_DIR)["embeddings"]
@@ -453,7 +453,7 @@ def test_ivfpq_ingest_stream_increments_and_restart(spark, store_dir, tmp_path):
         spark, str(incoming), schema, path, cents, seeds, ckpt
     )
     q.awaitTermination(120)
-    after1 = storage.read_ivfpq_codes(spark, path)
+    after1 = storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path))
     assert after1.count() == base + 1
     key = ["cid"] + [f"c{s}" for s in range(PQ_S)]
     row0 = after1.where("vec_id = 0").first()
@@ -466,7 +466,7 @@ def test_ivfpq_ingest_stream_increments_and_restart(spark, store_dir, tmp_path):
         spark, str(incoming), schema, path, cents, seeds, ckpt
     )
     q2.awaitTermination(120)
-    after2 = storage.read_ivfpq_codes(spark, path)
+    after2 = storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path))
     assert after2.count() == base + 2
     assert after2.where("vec_id = 300000").count() == 1
 
@@ -512,7 +512,7 @@ def test_ivfpq_store_compaction_reuses_cell_compactor(spark, store_dir, tmp_path
             target = int(c.split("=")[1])
     assert target is not None  # vec 0's cell holds base + 3 batch leaves
     before = sorted(
-        tuple(r) for r in storage.read_ivfpq_codes(spark, path).collect()
+        tuple(r) for r in storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path)).collect()
     )
     compact_ivf_cell(spark, path, target)
     leaves = [
@@ -522,7 +522,7 @@ def test_ivfpq_store_compaction_reuses_cell_compactor(spark, store_dir, tmp_path
     ]
     assert len(leaves) == 1
     after = sorted(
-        tuple(r) for r in storage.read_ivfpq_codes(spark, path).collect()
+        tuple(r) for r in storage.read_ivfpq_codes(spark, SF_DIR, storage.ivfpq_store_k(path)).collect()
     )
     assert after == before
 
@@ -573,7 +573,7 @@ def test_ensure_rhp_band_store_migrates_across_rungs(spark, store_dir, monkeypat
     monkeypatch.setattr(storage, "build_rhp_band_store", _no_build)
     p6 = storage.ensure_rhp_band_store(spark, SF_DIR, bits=6)
     assert storage.rhp_store_bits(p6) == 6
-    got = _bands_key(storage.read_rhp_bands(spark, p6).collect())
+    got = _bands_key(storage.read_rhp_bands(spark, SF_DIR, storage.rhp_store_bits(p6)).collect())
     fresh = _bands_key(rhp_band_frame_at(spark, SF_DIR, 6).collect())
     assert got == fresh
 
@@ -628,7 +628,7 @@ def test_rhp_band_store_width_migration(spark, store_dir):
     old = storage.build_rhp_band_store(spark, SF_DIR, bits=4)
     migrated = storage.migrate_rhp_band_store(spark, SF_DIR, old, 6)
     assert storage.rhp_store_bits(migrated) == 6
-    got = _bands_key(storage.read_rhp_bands(spark, migrated).collect())
+    got = _bands_key(storage.read_rhp_bands(spark, SF_DIR, storage.rhp_store_bits(migrated)).collect())
     fresh = _bands_key(rhp_band_frame_at(spark, SF_DIR, 6).collect())
     assert got == fresh
     # idempotent: a second migration returns the existing store
