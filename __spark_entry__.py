@@ -32,8 +32,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # see docs/PLANS.md "Driver 50-query cap"), so we rotate. The r14 head is
 # (1) the 22 queries last driver-green in r09, whose evidence would reach
 # age 5 in r14 (tests/test_local_correctness.py enforces the <= 4 bound),
-# then (2) the stalest r10-green queries filling the cap to exactly 50.
-# Every r13-modified query was driver-green in CORRECTNESS_r13.json.
+# then (2) 20 of the stalest r10-green queries, then (3) the 8
+# _ROUND_MODIFIED representatives below, exactly 50 in all. Every
+# r13-modified query was driver-green in CORRECTNESS_r13.json.
 _DRIVER_PRIORITY = [
     # --- last driver-green r09: MUST lead the r14 head
     "discussions_by_hot",
@@ -79,30 +80,28 @@ _DRIVER_PRIORITY = [
     "normalize_text",
     "payout_accumulation",
     "pii_redact",
-    "post_with_votes",
-    "pricing_summary",
-    "range_join_events",
-    "reblogged_by_agg",
-    "regional_revenue",
-    "replies_in_notin",
-    "sales_rollup",
-    "sampled_quantiles",
 ]
 # rotated past the 50-slot cap (regenerated each round so head + this =
-# registry). Every one stays hash-checked locally each round
-# (tests/test_driver_queries.py) and in the committed LOCAL_CORRECTNESS
-# artifact (local_correctness.py). Disjoint from _DRIVER_PRIORITY and
-# _ROUND_MODIFIED by construction (ADVICE r11 #3);
-# test_rotation_lists_are_disjoint pins it. The 11 r10-green names left
-# here (segment_region_cube .. weighted_sample) must lead the r15 head.
+# registry). Under the representatives policy below this list MAY hold
+# queries touched this round, provided a family representative sits in
+# the head and the touched query itself is hash-checked locally
+# (tests/test_driver_queries.py at sf0.01 in the core or slow tier, and a
+# `local_correctness.py --only` run recorded in CHANGES.md); untouched
+# entries are green in an earlier CORRECTNESS_r*.json. Disjoint from
+# _DRIVER_PRIORITY and _ROUND_MODIFIED by construction (ADVICE r11 #3);
+# test_rotation_lists_are_disjoint pins it. The 19 r10-green names here
+# (post_with_votes, pricing_summary, range_join_events, reblogged_by_agg,
+# regional_revenue, replies_in_notin, sales_rollup, sampled_quantiles,
+# segment_region_cube, sessionize, set_diff_reconcile, shipping_priority,
+# sliding_event_counts, tag_membership, token_count_quantiles,
+# top_ngrams, tumbling_event_counts, url_density, weighted_sample) reach
+# the four-round evidence bound in r14 and must lead the r15 head.
 _DRIVER_ROTATE_LAST = [
     "above_nation_avg_balance",
     "account_history_page",
     "adaptive_maintenance_audit",
-    "ann_ivf_kmeans_nprobe",
     "ann_ivf_kmeans_topk",
     "ann_ivf_nprobe_topk",
-    "ann_ivf_sharded_recall_audit",
     "ann_ivf_sharded_topk",
     "ann_ivf_topk",
     "ann_ivfpq_batch",
@@ -127,17 +126,14 @@ _DRIVER_ROTATE_LAST = [
     "chunk_dedup",
     "chunk_documents",
     "chunk_excise",
-    "clustered_adaptive_ivfpq_topk",
     "clustered_adaptive_merge_audit",
     "clustered_adaptive_probe_recall_audit",
     "clustered_adaptive_semdedup_audit",
     "clustered_adaptive_semdedup_w2_audit",
     "clustered_adaptive_semdedup_w2k16_audit",
-    "clustered_adaptive_topk_p1",
     "clustered_adaptive_topk_p2",
     "clustered_fixture_stats",
     "clustered_ivf_occupancy_audit",
-    "clustered_ivfpq_residual_recall_audit",
     "clustered_ivfpq_residual_topk",
     "clustered_ivfpq_trained_recall_audit",
     "clustered_ivfpq_trained_topk",
@@ -183,8 +179,6 @@ _DRIVER_ROTATE_LAST = [
     "hard_negatives",
     "hll_daily_merge",
     "index_occupancy_audit",
-    "ivfpq_recall_audit",
-    "ivfpq_residual_recall_audit",
     "ivfpq_trained_recall_audit",
     "kmv_set_ops",
     "leakage_free_split",
@@ -192,11 +186,18 @@ _DRIVER_ROTATE_LAST = [
     "lsh_recall_audit_sampled",
     "minhash_decontaminate",
     "mixture_weights",
+    "post_with_votes",
     "pq_recall_audit",
     "pq_train",
-    "pq_trained_recall_audit",
+    "pricing_summary",
     "quantile_error_audit",
+    "range_join_events",
+    "reblogged_by_agg",
+    "regional_revenue",
+    "replies_in_notin",
     "rrf_hybrid_search",
+    "sales_rollup",
+    "sampled_quantiles",
     "segment_region_cube",
     "semdedup",
     "sessionize",
@@ -229,8 +230,19 @@ _DRIVER_ROTATE_LAST = [
 # rotated past position 50.
 # tests/test_driver_queries.py::test_round_modified_queries_inside_driver_cap
 # enforces the placement (and that nothing listed here is simultaneously
-# rotated last). r14 changes no query body.
-_ROUND_MODIFIED: list[str] = []
+# rotated last). r14 routes the vector-index probes through one shared
+# kernel (route / adc_cut / exact_topk / recall_at_k) and fingerprints the
+# cf/cmass fixture fit stores; one representative per shape of the kernel:
+_ROUND_MODIFIED: list[str] = [
+    "ann_ivf_kmeans_nprobe",  # route + exact_topk (serve suite query)
+    "ann_ivf_sharded_recall_audit",  # two-level route + corpus recall
+    "ivfpq_recall_audit",  # route + adc_cut over cells + rerank
+    "pq_trained_recall_audit",  # adc_cut over every code row
+    "ivfpq_residual_recall_audit",  # adc_cut with per-cell LUTs
+    "clustered_ivfpq_residual_recall_audit",  # fixture recall + cf-fit store
+    "clustered_adaptive_ivfpq_topk",  # cmass-fit store + leaf route + cut
+    "clustered_adaptive_topk_p1",  # exact_topk over routed leaf members
+]
 
 def _ordered(names: list[str]) -> list[str]:
     head = [n for n in _DRIVER_PRIORITY if n in names]

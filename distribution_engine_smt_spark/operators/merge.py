@@ -23,9 +23,10 @@ Scale notes (100 TB), plan-asserted in tests/test_plan_shapes.py
   pays exactly ONE Exchange for the union — the minimum for a global
   rank — and bucketing cannot remove it, because the window's required
   distribution sits above the union, not above the scans. What bounds it
-  at scale is partition scoping, not bucketing: ``merge_into_partitioned``
-  reads/rewrites only the delta's touched partitions, so that one
-  exchange carries touched-partition rows, never the table.
+  at scale is partition scoping, not bucketing:
+  ``DualStreamRunner.save_state``'s journaled swap stages and swaps only
+  the partitions a batch touched, so that one exchange carries
+  touched-partition rows, never the table.
 - ``merge_upsert`` is idempotent under replay when ``seq`` is derived from
   (block_num, op_seq): re-merging the same delta yields the same state
   (reference semantics ST3/ST4 — per-block transactionality + resume).

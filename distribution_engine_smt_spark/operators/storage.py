@@ -308,13 +308,10 @@ def probe_ivf_index(spark, index_dir: str, centroids, q_vec, top: int = 10):
     tests assert via ``inputFiles()`` that untouched cells are never read."""
     from pyspark.sql import functions as F
 
-    from ..pipeline.similarity import dot_fold
+    from ..pipeline.similarity import dot_fold, route
 
     # driver-side coarse assignment (exactly what a vector-DB router does)
-    def d2(a, b):
-        return sum((float(x) - float(y)) ** 2 for x, y in zip(a, b))
-
-    q_cid = min(range(len(centroids)), key=lambda i: (d2(q_vec, centroids[i]), i))
+    q_cid = route(q_vec, centroids, 1)[0]
     q_norm = sum(float(x) * float(x) for x in q_vec) ** 0.5
     from ..pipeline.similarity import dlit_array
 
@@ -1292,7 +1289,7 @@ def probe_adaptive_ivfpq(
     store's SAME leaves. Per probed hot cell the read is
     ~nprobe2/k2 of the cell's codes — the two prunings (cell, leaf)
     multiply, and both apply to the compressed table."""
-    from ..pipeline.similarity import pq_query_lut, pq_adc_col, pq_seed_vectors
+    from ..pipeline.similarity import adc_cut, pq_query_lut, pq_seed_vectors
 
     leaves = _adaptive_leaves(load_adaptive_ivf_meta(sf_dir, k1), q_vec, nprobe, nprobe2)
     # last-line read-side guard (ADVICE r11 #1): if a crashed
@@ -1318,11 +1315,7 @@ def probe_adaptive_ivfpq(
         cond = leaf if cond is None else cond | leaf
     codes = spark.read.parquet(cpath).where(cond)
     lut = pq_query_lut(pq_seed_vectors(spark, sf_dir), q_vec)
-    shortlist = (
-        codes.select("vec_id", pq_adc_col(lut).alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(cand)
-    )
+    shortlist = adc_cut(codes, None, lut, cand)
     vec = spark.read.parquet(
         adaptive_ivf_store_path(sf_dir, k1)
     ).where(cond)
@@ -1336,23 +1329,12 @@ def _adaptive_leaves(meta: dict, q_vec, nprobe: int, nprobe2: int) -> list[tuple
     ``nprobe`` nearest level-1 cells; inside a split (hot) cell its
     ``nprobe2`` nearest level-2 leaves, and a cold cell's single
     ``(cid1, 0)`` leaf. Ties break on the lower cell id."""
+    from ..pipeline.similarity import route
 
-    def d2(c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    cents1 = meta["cents1"]
-    sel1 = sorted(range(len(cents1)), key=lambda i: (d2(cents1[i]), i))[:nprobe]
     leaves = []
-    for c1 in sel1:
+    for c1 in route(q_vec, meta["cents1"], nprobe):
         if c1 in meta["level2"]:
-            cents2 = meta["level2"][c1]
-            order = sorted(
-                range(len(cents2)), key=lambda i: (d2(cents2[i]), i)
-            )
-            for c2 in order[:nprobe2]:
+            for c2 in route(q_vec, meta["level2"][c1], nprobe2):
                 leaves.append((c1, c2))
         else:
             leaves.append((c1, 0))
@@ -2797,14 +2779,15 @@ def read_clustered_mass_sem_pairs(
 def clustered_mass_fit_store_path(n: int | None = None) -> str:
     from ..pipeline.clustered import CF_C, CF_HOT_PCT, CF_N
 
-    # l2 layout: rows carry cid2b (second-nearest level-2 leaf inside
+    # l3 layout: rows carry cid2b (second-nearest level-2 leaf inside
     # hot cells; ties (distance, cid) ascending) next to cid2 — the
     # width-2 blocking audit reads it instead of re-deriving the
-    # assignment per cold run. ``n`` selects the fixture size (the
+    # assignment per cold run — and _meta.json carries the generator
+    # fingerprint (_fixture_meta). ``n`` selects the fixture size (the
     # scale-free trailing-zeros construction; default CF_N, the wide
     # k2 >= 16 fixture uses CW_N).
     n = CF_N if n is None else n
-    return _store_path("cmass-fit", f"l2-n{n}-c{CF_C}-h{CF_HOT_PCT}")
+    return _store_path("cmass-fit", f"l3-n{n}-c{CF_C}-h{CF_HOT_PCT}")
 
 
 def build_clustered_mass_fit_store(
@@ -2906,6 +2889,7 @@ def _write_cmass_fit(spark: SparkSession, n_fix: int, tmp: str) -> None:
         "cents1": cents1,
         "level2": {str(c): v for c, v in level2.items()},
         "sizes": {str(c): sz for c, sz in sizes.items()},
+        "generator": _generator_fingerprint(cm_point),
     }
     _write_json(tmp, meta)
     fx.unpersist()
@@ -2917,8 +2901,10 @@ def read_clustered_mass_fit(spark: SparkSession, n: int | None = None):
     ``n`` (default CF_N), or (None, None) when the store hasn't been
     built. Meta floats round-trip exactly (json double round-trip, the
     kmeans-fit-store discipline)."""
+    from ..pipeline.clustered import cm_point
+
     path = clustered_mass_fit_store_path(n)
-    blob = _read_json(path)
+    blob = _fixture_meta(path, cm_point)
     if blob is None:
         return None, None
     meta = {
@@ -3075,13 +3061,14 @@ def maybe_compact_adaptive_ivf_store(
 def clustered_cf_fit_store_path() -> str:
     from ..pipeline.clustered import CF_C, CF_N
 
-    # l3 layout: l2's fit/ + codes-trained/ + codes-residual/ plus the
+    # l4 layout: fit/ + codes-trained/ + codes-residual/ plus the
     # AUDIT widths (VERDICT r11 #1): fit-ksplit/ (the k = 2C
     # width-mismatch fit), codes-plain/ and codes-residgen/ (the
-    # variant-pricing audit's seeded codes vs the generative centers).
-    # The tag bump retires l2 stores so a stale layout is simply never
-    # found (the fingerprint discipline applied to the layout itself).
-    return _store_path("cf-fit", f"l3-n{CF_N}-c{CF_C}")
+    # variant-pricing audit's seeded codes vs the generative centers),
+    # and the generator fingerprint in _meta.json (_fixture_meta). Each
+    # tag bump retires the older stores, so a stale layout is simply
+    # never found.
+    return _store_path("cf-fit", f"l4-n{CF_N}-c{CF_C}")
 
 
 def build_clustered_cf_fit_store(spark: SparkSession, sf_dir: str) -> str:
@@ -3096,7 +3083,7 @@ def build_clustered_cf_fit_store(spark: SparkSession, sf_dir: str) -> str:
         codes-residual/  (vec_id, cid, c0..c{S-1})   encoded vs pq_rseeds
         codes-plain/     (vec_id, c0..c{S-1})        seeded plain codes
         codes-residgen/  (vec_id, cl, c0..c{S-1})    residual vs cf_center
-        _meta.json       {cents, pq_vseeds, pq_rseeds}
+        _meta.json       {cents, pq_vseeds, pq_rseeds, generator}
 
     The l3 additions carry the AUDIT widths (VERDICT r11 #1): the four
     fixture audits that dominated BENCH_r11 cold_top each re-ran a
@@ -3194,14 +3181,56 @@ def _write_cf_fit(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     residgen.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(tmp, "codes-residgen")
     )
-    _write_json(tmp, {"cents": cents, "pq_vseeds": vseeds, "pq_rseeds": rseeds})
+    _write_json(
+        tmp,
+        {
+            "cents": cents,
+            "pq_vseeds": vseeds,
+            "pq_rseeds": rseeds,
+            "generator": _generator_fingerprint(cf_point),
+        },
+    )
     fx.unpersist()
+
+
+def _generator_fingerprint(point) -> str:
+    """Fingerprint of a fixture generator (``cf_point`` or ``cm_point``):
+    a hash of CF_N, CF_C and a few generated rows. The fixture stores
+    derive from code constants, not corpus tables, so no input
+    fingerprint names them; a generator change is caught by this one."""
+    import hashlib
+    import json
+
+    from ..pipeline.clustered import CF_C, CF_N
+
+    rows = [point(i) for i in (0, 1, CF_C, CF_N - 1)]
+    return hashlib.sha256(json.dumps([CF_N, CF_C, rows]).encode()).hexdigest()[:16]
+
+
+def _fixture_meta(path: str, point) -> dict | None:
+    """A fixture fit store's sidecar, or None when unbuilt. A store built
+    by another generator than the live ``point`` raises ValueError naming
+    it, instead of serving rows the oracles no longer derive."""
+    blob = _read_json(path)
+    if blob is not None and blob.get("generator") != _generator_fingerprint(point):
+        raise ValueError(
+            f"fixture store {path} was built by a different generator than "
+            "the live one; delete it and rebuild"
+        )
+    return blob
+
+
+def _cf_fit_meta() -> tuple[str, dict | None]:
+    """(path, generator-checked sidecar or None) of the CF fit store."""
+    from ..pipeline.clustered import cf_point
+
+    path = clustered_cf_fit_store_path()
+    return path, _fixture_meta(path, cf_point)
 
 
 def read_clustered_cf_fit(spark: SparkSession):
     """(fit frame, meta) for the materialized CF fit, or (None, None)."""
-    path = clustered_cf_fit_store_path()
-    blob = _read_json(path)
+    path, blob = _cf_fit_meta()
     if blob is None:
         return None, None
     meta = {k: _floats(blob[k]) for k in ("cents", "pq_vseeds", "pq_rseeds")}
@@ -3211,11 +3240,11 @@ def read_clustered_cf_fit(spark: SparkSession):
 def read_clustered_cf_codes(spark: SparkSession, variant: str):
     """The materialized code table for ``variant`` in {"trained",
     "residual", "plain", "residgen"}, or None when unbuilt."""
-    return _read_store(spark, clustered_cf_fit_store_path(), sub=f"codes-{variant}")
+    return _read_store(spark, _cf_fit_meta()[0], sub=f"codes-{variant}")
 
 
 def read_clustered_cf_ksplit(spark: SparkSession):
     """The materialized (vec_id, cid) assignment of the k = CF_KSPLIT
     width-mismatch Lloyd fit, or None when unbuilt — the
     clustered_ivf_occupancy_audit's read-or-compute input."""
-    return _read_store(spark, clustered_cf_fit_store_path(), sub="fit-ksplit")
+    return _read_store(spark, _cf_fit_meta()[0], sub="fit-ksplit")

@@ -592,29 +592,15 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_recall_sql() -> str:
-    from .clustering import _IVF_NPROBE_SQL
-    from .similarity import _cos_sql
+from .clustering import _IVF_NPROBE_SQL, _IVFPQ_SQL, ann_ivf_kmeans_nprobe, ann_ivfpq_topk  # noqa: E402
+from .similarity import CORPUS, _pq_sql, ann_pq_topk, recall_at_k  # noqa: E402
 
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id FROM ({brute}) e JOIN ({_IVF_NPROBE_SQL}) a USING (vec_id)
-    )
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / 10, 6) AS recall_at_k
-    """
+_ANN_RECALL_SQL, _ann_recall = recall_at_k(
+    _IVF_NPROBE_SQL, ann_ivf_kmeans_nprobe, CORPUS
+)
 
 
-@register("ann_recall_audit", _ann_recall_sql())
+@register("ann_recall_audit", _ANN_RECALL_SQL)
 def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured ANN quality: recall@10 of the trained-IVF nprobe probe
     against the exact brute-force ranking for the same query vector.
@@ -623,45 +609,13 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe must read to hold the recall target. Composes two oracled
     operators; with the fit store present the IVF side routes through
     the stored quantizer."""
-    from .clustering import ann_ivf_kmeans_nprobe
-    from .similarity import ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(ann_ivf_kmeans_nprobe(spark, sf_dir).select("vec_id"))
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.expr("CAST(count(*) AS BIGINT) AS n_overlap")
-    )
-    return hit.selectExpr(
-        "CAST(10 AS BIGINT) AS k",
-        "n_overlap",
-        "round(CAST(n_overlap AS DOUBLE) / 10, 6) AS recall_at_k",
-    )
+    return _ann_recall(spark, sf_dir)
 
 
-def _pq_recall_sql() -> str:
-    from .similarity import _cos_sql, _pq_sql
-
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id FROM ({brute}) e JOIN ({_pq_sql()}) a USING (vec_id)
-    )
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / 10, 6) AS recall_at_k
-    """
+_PQ_RECALL_SQL, _pq_recall = recall_at_k(_pq_sql(), ann_pq_topk, CORPUS)
 
 
-@register("pq_recall_audit", _pq_recall_sql())
+@register("pq_recall_audit", _PQ_RECALL_SQL)
 def pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured PQ quality — the third leg of the approximation-audit
     trio (LSH pair recall, IVF nprobe recall@k, and now product
@@ -670,45 +624,13 @@ def pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC candidates must survive to the rerank for the recall target) —
     4-byte codes quantize aggressively, and whether that costs recall is
     an empirical question per corpus, not a design assumption."""
-    from .similarity import ann_pq_topk, ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(ann_pq_topk(spark, sf_dir).select("vec_id"))
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.expr("CAST(count(*) AS BIGINT) AS n_overlap")
-    )
-    return hit.selectExpr(
-        "CAST(10 AS BIGINT) AS k",
-        "n_overlap",
-        "round(CAST(n_overlap AS DOUBLE) / 10, 6) AS recall_at_k",
-    )
+    return _pq_recall(spark, sf_dir)
 
 
-def _ivfpq_recall_sql() -> str:
-    from .clustering import _IVFPQ_SQL
-    from .similarity import _cos_sql
-
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id FROM ({brute}) e JOIN ({_IVFPQ_SQL}) a USING (vec_id)
-    )
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / 10, 6) AS recall_at_k
-    """
+_IVFPQ_RECALL_SQL, _ivfpq_recall = recall_at_k(_IVFPQ_SQL, ann_ivfpq_topk, CORPUS)
 
 
-@register("ivfpq_recall_audit", _ivfpq_recall_sql())
+@register("ivfpq_recall_audit", _IVFPQ_RECALL_SQL)
 def ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured IVF-PQ quality: recall@10 of the composed probe (cell
     pruning x ADC code scan x exact rerank) against brute-force cosine.
@@ -717,21 +639,7 @@ def ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVFPQ_CAND — and this audit prices their PRODUCT, which neither
     ann_recall_audit nor pq_recall_audit sees alone. THE regression gate
     on the nprobe/IVFPQ_CAND pair per corpus."""
-    from .clustering import ann_ivfpq_topk
-    from .similarity import ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(ann_ivfpq_topk(spark, sf_dir).select("vec_id"))
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.expr("CAST(count(*) AS BIGINT) AS n_overlap")
-    )
-    return hit.selectExpr(
-        "CAST(10 AS BIGINT) AS k",
-        "n_overlap",
-        "round(CAST(n_overlap AS DOUBLE) / 10, 6) AS recall_at_k",
-    )
+    return _ivfpq_recall(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

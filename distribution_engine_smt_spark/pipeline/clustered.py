@@ -57,11 +57,16 @@ from .similarity import (
     PQ_DSUB,
     PQ_K,
     PQ_S,
+    RecallBaseline,
     _cos_sql,
+    adc_cut,
+    brute_force_sql,
     dot_fold,
-    pq_adc_col,
+    exact_topk,
     pq_encode,
     pq_query_lut,
+    recall_at_k,
+    route,
 )
 
 CF_N = 2048  # fixture corpus size
@@ -832,37 +837,6 @@ def _cf_residual_parts(
     return resid, rseeds
 
 
-def _cf_d2(q_vec: list[float], c: list[float]) -> float:
-    acc = 0.0
-    for x, y in zip(q_vec, c):
-        acc = acc + (x - y) * (x - y)
-    return acc
-
-
-def _cf_rerank(fx: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact cosine rerank of the bounded ADC survivors against fixture
-    query vec 0 — the shared probe tail (broadcast candidates + broadcast
-    1-row query, one fixture scan)."""
-    from .similarity import dot_fold_sql
-
-    # one-parse SQL text (r13): same trees as the old Column-DSL chain
-    q = fx.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
-    return (
-        fx.join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(CF_TOP)
-    )
-
-
 def _cf_ivfpq_trained_sql() -> str:
     from .clustering import _fit_ctes
     from .pq import _ivfpq_trained_sql
@@ -897,9 +871,7 @@ def clustered_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = tracked_persist(fx)
     vseeds = _cf_pq_train_fit(spark, sf_dir)
     q_vec = cf_point(0)
-    sel = sorted(range(len(cents)), key=lambda i: (_cf_d2(q_vec, cents[i]), i))[
-        :NPROBE
-    ]
+    sel = route(q_vec, cents, NPROBE)
     # codes are store-read when built: planning the S x K encode
     # expressions dominates this 2k-row fixture's cold time, and a real
     # deployment encodes once at ingest (the pq_codes_frame discipline)
@@ -909,13 +881,8 @@ def clustered_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             asg.select("vec_id", "cid"), "vec_id"
         )
     lut = pq_query_lut(vseeds, q_vec)
-    cand = tracked_persist(
-        codes.where(F.col("cid").isin(sel) & (F.col("vec_id") != 0))
-        .select("vec_id", pq_adc_col(lut).alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(CF_IVFPQ_CAND)
-    )
-    return _cf_rerank(fx, cand)
+    cand = tracked_persist(adc_cut(codes, sel, lut, CF_IVFPQ_CAND))
+    return exact_topk(fx.join(F.broadcast(cand), "vec_id"), fx, CF_TOP)
 
 
 def _cf_ivfpq_residual_sql() -> str:
@@ -943,66 +910,31 @@ def clustered_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     fx, asg, cents = _cf_coarse_fit(spark, sf_dir)
     fx = tracked_persist(fx)
     q_vec = cf_point(0)
-    sel = sorted(range(len(cents)), key=lambda i: (_cf_d2(q_vec, cents[i]), i))[
-        :NPROBE
-    ]
+    sel = route(q_vec, cents, NPROBE)
     # residual codes + rseeds are store-read when built (same planning
     # economics as the trained twin; rseeds round-trip exactly via JSON)
-    stored_codes = read_clustered_cf_codes(spark, "residual")
-    if stored_codes is not None:
+    codes = read_clustered_cf_codes(spark, "residual")
+    if codes is not None:
         _f, _meta = read_clustered_cf_fit(spark)
         rseeds = _meta["pq_rseeds"]
-        codes = stored_codes.where(
-            F.col("cid").isin(sel) & (F.col("vec_id") != 0)
-        )
     else:
         resid, rseeds = _cf_residual_parts(spark, fx, asg, cents)
-        codes = pq_encode(resid, rseeds, keep=("cid",)).where(
-            F.col("cid").isin(sel) & (F.col("vec_id") != 0)
-        )
+        codes = pq_encode(resid, rseeds, keep=("cid",))
     luts = {
         c: pq_query_lut(rseeds, [q_vec[j] - cents[c][j] for j in range(DIM)])
         for c in sel
     }
-    approx = pq_adc_col(luts[sel[-1]])
-    for c in reversed(sel[:-1]):  # nested when/otherwise (ADVICE r8 #2)
-        approx = F.when(F.col("cid") == c, pq_adc_col(luts[c])).otherwise(approx)
-    cand = tracked_persist(
-        codes.select("vec_id", approx.alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(CF_IVFPQ_CAND)
-    )
-    return _cf_rerank(fx, cand)
+    cand = tracked_persist(adc_cut(codes, sel, luts, CF_IVFPQ_CAND))
+    return exact_topk(fx.join(F.broadcast(cand), "vec_id"), fx, CF_TOP)
 
 
-_CF_BRUTE = f"""WITH {_CFX_CTES}
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM cfx e
-    CROSS JOIN (SELECT embedding FROM cfx WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT {CF_TOP}"""
-
-
-def _cf_recall_audit_sql(probe_sql: str) -> str:
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id
-      FROM ({_CF_BRUTE}) e JOIN ({probe_sql}) a USING (vec_id)
-    )
-    SELECT CAST({CF_TOP} AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / {CF_TOP}, 6) AS recall_at_k
-    """
-
-
-def _cf_recall_audit_frame(
-    spark: SparkSession, sf_dir: str, probe: DataFrame
-) -> DataFrame:
-    # the exact-cosine baseline reads the stored fit rows when built
-    # (same vectors; equality pinned by the fit-store test) instead of
-    # re-generating the fixture — the oracle still derives from scratch
+def _cf_exact_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id) of the fixture's exact cosine top-CF_TOP for vec 0. Reads
+    the stored fit rows when built (same vectors; equality pinned by the
+    fit-store test) instead of re-generating the fixture — the oracle
+    still derives from scratch."""
     from ..operators.storage import read_clustered_cf_fit
+    from .similarity import cosine_sql
 
     _stored, _ = read_clustered_cf_fit(spark)
     fx = tracked_persist(
@@ -1010,34 +942,33 @@ def _cf_recall_audit_frame(
         if _stored is not None
         else clustered_fixture_frame(spark, sf_dir)
     )
-    from .similarity import cosine_sql
-
     # one-parse SQL text (r13): same trees as the old Column-DSL chain
     q = fx.filter(F.col("vec_id") == 0).selectExpr("embedding AS q_emb")
-    exact = (
+    return (
         fx.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id", cosine_sql("embedding", "q_emb") + " AS cos"
-        )
+        .selectExpr("vec_id", cosine_sql("embedding", "q_emb") + " AS cos")
         .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(CF_TOP)
         .select("vec_id")
     )
-    hit = exact.join(probe.select("vec_id"), "vec_id", "left_semi").agg(
-        F.expr("CAST(count(*) AS BIGINT) AS n_overlap")
-    )
-    return hit.selectExpr(
-        f"CAST({CF_TOP} AS BIGINT) AS k",
-        "n_overlap",
-        f"round(CAST(n_overlap AS DOUBLE) / {CF_TOP}, 6) AS recall_at_k",
-    )
 
 
-@register(
-    "clustered_ivfpq_trained_recall_audit",
-    _cf_recall_audit_sql(_cf_ivfpq_trained_sql()),
+# the clustered fixture as a recall baseline: brute force over the
+# generated cfx relation, the probe's ids read unheld
+CF_FIXTURE = RecallBaseline(
+    oracle=lambda k: f"WITH {_CFX_CTES}{brute_force_sql(k, 'cfx').rstrip()}",
+    exact=_cf_exact_ids,
+    hold=lambda df: df,
 )
+
+
+_CF_TRAINED_RECALL_SQL, _cf_trained_recall = recall_at_k(
+    _cf_ivfpq_trained_sql(), clustered_ivfpq_trained_topk, CF_FIXTURE, CF_TOP
+)
+
+
+@register("clustered_ivfpq_trained_recall_audit", _CF_TRAINED_RECALL_SQL)
 def clustered_ivfpq_trained_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1046,23 +977,21 @@ def clustered_ivfpq_trained_recall_audit(
     end-to-end form of clustered_pq_variant_audit's residual-beats-plain
     statement (trained plain codewords re-learn the coarse structure the
     quantizer already removed, so within-cell ranking stays loose)."""
-    return _cf_recall_audit_frame(
-        spark, sf_dir, clustered_ivfpq_trained_topk(spark, sf_dir)
-    )
+    return _cf_trained_recall(spark, sf_dir)
 
 
-@register(
-    "clustered_ivfpq_residual_recall_audit",
-    _cf_recall_audit_sql(_cf_ivfpq_residual_sql()),
+_CF_RESIDUAL_RECALL_SQL, _cf_residual_recall = recall_at_k(
+    _cf_ivfpq_residual_sql(), clustered_ivfpq_residual_topk, CF_FIXTURE, CF_TOP
 )
+
+
+@register("clustered_ivfpq_residual_recall_audit", _CF_RESIDUAL_RECALL_SQL)
 def clustered_ivfpq_residual_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Recall@10 of the residual end-to-end probe vs fixture brute force
     — the residual side of the pair."""
-    return _cf_recall_audit_frame(
-        spark, sf_dir, clustered_ivfpq_residual_topk(spark, sf_dir)
-    )
+    return _cf_residual_recall(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -2367,10 +2296,7 @@ def _cm_query_cell_fit(spark: SparkSession, sf_dir: str):
     stored, meta = read_clustered_mass_fit(spark)
     if stored is not None:
         fx = tracked_persist(stored)
-        cents = meta["cents1"]
-        cid0 = min(
-            range(len(cents)), key=lambda i: (_cf_d2(q, cents[i]), i)
-        )
+        cid0 = route(q, meta["cents1"], 1)[0]
         if cid0 not in meta["level2"]:
             # cold query cell: no level-2 fit exists — degrade exactly
             # like the SQL's hot-gated CTEs (empty members)
@@ -2393,9 +2319,7 @@ def _cm_query_cell_fit(spark: SparkSession, sf_dir: str):
             emb, [cm_point(k) for k in range(CF_C)]
         )
         asg = tracked_persist(asg)
-        cid0 = min(
-            range(len(cents)), key=lambda i: (_cf_d2(q, cents[i]), i)
-        )
+        cid0 = route(q, cents, 1)[0]
         sz = asg.filter(F.col("cid") == cid0).count()
         if sz * CF_C * 100 <= CF_HOT_PCT * CF_N:
             # same integer hot gate as the store build and the SQL
@@ -2519,8 +2443,7 @@ def clustered_adaptive_probe_recall_audit(
     as the occupancy audit; the oracle re-derives everything from
     scratch, keeping the store hash-checked)."""
     fx, members, cents2 = _cm_query_cell_fit(spark, sf_dir)
-    q = cm_point(0)
-    order2 = sorted(range(len(cents2)), key=lambda i: (_cf_d2(q, cents2[i]), i))
+    order2 = route(cm_point(0), cents2, 2)
     sel1, sel2 = order2[:1], order2[:2]
 
     from .similarity import cosine_sql
@@ -2615,16 +2538,13 @@ def _cm_adaptive_topk(
     spark: SparkSession, sf_dir: str, nprobe2: int
 ) -> DataFrame:
     fx, members, cents2 = _cm_query_cell_fit(spark, sf_dir)
-    q = cm_point(0)
-    sel = sorted(
-        range(len(cents2)), key=lambda i: (_cf_d2(q, cents2[i]), i)
-    )[:nprobe2]
+    sel = route(cm_point(0), cents2, nprobe2)
     # cold query cell (cents2 == []): members is already empty — skip
     # the isin so the plan never carries an empty IN list
     cand = (
         members.filter(F.col("cid2").isin(sel)) if sel else members
     ).select("vec_id")
-    return _cf_rerank(fx, cand)
+    return exact_topk(fx.join(F.broadcast(cand), "vec_id"), fx, CF_TOP)
 
 
 @register("clustered_adaptive_topk_p1", _cm_adaptive_topk_sql(1))
@@ -2741,30 +2661,21 @@ def clustered_adaptive_ivfpq_topk(
     but the scan reads PQ_S-byte codes instead of float vectors — the
     layout build_adaptive_ivfpq_code_store materializes, replayed on
     the fixture fits so DuckDB re-derives everything from scratch."""
-    from .similarity import pq_adc_col, pq_encode, pq_query_lut
-
     fx, members, cents2 = _cm_query_cell_fit(spark, sf_dir)
     seeds = [
         [float(x) for x in r["embedding"]]
         for r in fx.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
     ]
     q_vec = seeds[0]  # vec_id 0 doubles as the query vector
-    sel = sorted(
-        range(len(cents2)), key=lambda i: (_cf_d2(q_vec, cents2[i]), i)
-    )[:2]
+    sel = route(q_vec, cents2, 2)
     scanned = (
         members.filter(F.col("cid2").isin(sel)) if sel else members
     ).select("vec_id")
     codes = pq_encode(
         fx.select("vec_id", "embedding").join(scanned, "vec_id"), seeds
     )
-    lut = pq_query_lut(seeds, q_vec)
-    cand = (
-        codes.select("vec_id", pq_adc_col(lut).alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(CF_IVFPQ_CAND)
-    )
-    return _cf_rerank(fx, cand)
+    cand = adc_cut(codes, None, pq_query_lut(seeds, q_vec), CF_IVFPQ_CAND)
+    return exact_topk(fx.join(F.broadcast(cand), "vec_id"), fx, CF_TOP)
 
 
 

@@ -447,7 +447,13 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_TOP = 10
 
-from .similarity import _cos_sql  # noqa: E402  (registered module, no cycle)
+from .similarity import (  # noqa: E402  (registered module, no cycle)
+    CORPUS,
+    _cos_sql,
+    exact_topk,
+    recall_at_k,
+    route,
+)
 
 _IVF_KMEANS_SQL = f"""WITH {_fit_ctes_dyn()},
     q AS (SELECT embedding AS q_emb, cid AS q_cid FROM g2 WHERE vec_id = 0)
@@ -483,26 +489,13 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are driver-state, exactly as a production index-build job would hold
     them."""
     asg, _cents = kmeans_fit(spark, sf_dir)
-    emb = _t(spark, sf_dir)["embeddings"]
-    from .similarity import dot_fold_sql
-
-    # one-parse SQL text (r13): same trees as the old Column-DSL chain
-    cells = emb.join(asg, "vec_id")
-    q = cells.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
+    cells = _t(spark, sf_dir)["embeddings"].join(asg, "vec_id")
+    return exact_topk(
+        cells,
+        cells,
+        IVF_TOP,
         "cid AS q_cid",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
-    return (
-        cells.crossJoin(F.broadcast(q))
-        .where((F.col("cid") == F.col("q_cid")) & (F.col("vec_id") != 0))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(IVF_TOP)
+        where=(F.col("cid") == F.col("q_cid")) & (F.col("vec_id") != 0),
     )
 
 
@@ -513,13 +506,21 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 NPROBE = 2
 
 
-_IVF_NPROBE_SQL = f"""WITH {_fit_ctes_dyn()},
-    q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
+def route_ctes(nprobe: int) -> str:
+    """DuckDB twin of ``similarity.route`` as WITH-body CTEs over the
+    fit's ``c1v`` centroids: q (query vec 0), qd (its squared distance to
+    every centroid, the same left fold), sel (the ``nprobe`` nearest
+    cells, ties to the lower cid)."""
+    return f"""q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
     qd AS (
       SELECT c.cid, {_dist_sql('q.q_emb', 'c.c')} AS d
       FROM c1v c, q
     ),
-    sel AS (SELECT cid FROM qd ORDER BY d ASC, cid ASC LIMIT {NPROBE})
+    sel AS (SELECT cid FROM qd ORDER BY d ASC, cid ASC LIMIT {nprobe})"""
+
+
+_IVF_NPROBE_SQL = f"""WITH {_fit_ctes_dyn()},
+    {route_ctes(NPROBE)}
     SELECT e.vec_id,
            {_cos_sql('e.embedding', 'q.q_emb')} AS cos
     FROM g2 e JOIN sel ON e.cid = sel.cid CROSS JOIN q
@@ -545,33 +546,10 @@ def ann_ivf_kmeans_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg, cents = kmeans_fit(spark, sf_dir)
     emb = _t(spark, sf_dir)["embeddings"]
     q_row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    q_vec = [float(x) for x in q_row["embedding"]]
-
-    def d2(c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    sel = sorted(range(len(cents)), key=lambda i: (d2(cents[i]), i))[:NPROBE]
-    from .similarity import dot_fold_sql
-
-    # one-parse SQL text (r13): same trees as the old Column-DSL chain
-    q = emb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
+    sel = route([float(x) for x in q_row["embedding"]], cents, NPROBE)
     cells = emb.join(asg, "vec_id")
-    return (
-        cells.where(F.col("cid").isin(sel) & (F.col("vec_id") != 0))
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(IVF_TOP)
+    return exact_topk(
+        cells.where(F.col("cid").isin(sel) & (F.col("vec_id") != 0)), emb, IVF_TOP
     )
 
 
@@ -662,26 +640,16 @@ def ann_ivf_sharded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the store build runs this exact derivation once) and the oracle is
     unchanged."""
     from ..operators import storage as _storage
-    from .similarity import dot_fold_sql
 
     emb = _t(spark, sf_dir)["embeddings"]
     q_row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     q_vec = [float(x) for x in q_row["embedding"]]
 
-    def d2(c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
     meta = _storage.load_sharded_ivf_meta(sf_dir)
     if meta is not None:
         cents1, level2 = meta
-        q_cid = min(range(len(cents1)), key=lambda i: (d2(cents1[i]), i))
-        cents2 = level2[q_cid]
-        sel2 = sorted(range(len(cents2)), key=lambda i: (d2(cents2[i]), i))[
-            :NPROBE
-        ]
+        q_cid = route(q_vec, cents1, 1)[0]
+        sel2 = route(q_vec, level2[q_cid], NPROBE)
         cell = (
             _storage.read_sharded_ivf(spark, sf_dir)
             .where(F.col("cid1") == q_cid)
@@ -690,7 +658,7 @@ def ann_ivf_sharded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         asg2 = None  # codes live in the partition layout, no query fit
     else:
         asg, cents = kmeans_fit(spark, sf_dir)
-        q_cid = min(range(len(cents)), key=lambda i: (d2(cents[i]), i))
+        q_cid = route(q_vec, cents, 1)[0]
         cell = (
             emb.join(asg.filter(F.col("cid") == q_cid), "vec_id")
             .select("vec_id", "embedding")
@@ -702,51 +670,20 @@ def ann_ivf_sharded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in cell.orderBy("vec_id").limit(k2).collect()
         ]
         asg2, cents2 = _lloyd_fit_frame(cell, seeds2)
-        sel2 = sorted(range(len(cents2)), key=lambda i: (d2(cents2[i]), i))[
-            :NPROBE
-        ]
-    # one-parse SQL text (r13): same trees as the old Column-DSL chain
-    q = emb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
+        sel2 = route(q_vec, cents2, NPROBE)
     if asg2 is not None:  # derived path: attach the query-time level-2 fit
         cell = cell.join(asg2.withColumnRenamed("cid", "cid2"), "vec_id")
-    return (
-        cell.where(F.col("cid2").isin(sel2) & (F.col("vec_id") != 0))
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(IVF_TOP)
+    return exact_topk(
+        cell.where(F.col("cid2").isin(sel2) & (F.col("vec_id") != 0)), emb, IVF_TOP
     )
 
 
-def _ivf_sharded_recall_sql() -> str:
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT {IVF_TOP}
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id
-      FROM ({brute}) e JOIN ({_ivf_sharded_sql()}) a USING (vec_id)
-    )
-    SELECT CAST({IVF_TOP} AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / {IVF_TOP}, 6)
-             AS recall_at_k
-    """
+_SHARDED_RECALL_SQL, _sharded_recall = recall_at_k(
+    _ivf_sharded_sql(), ann_ivf_sharded_topk, CORPUS, IVF_TOP
+)
 
 
-@register("ann_ivf_sharded_recall_audit", _ivf_sharded_recall_sql())
+@register("ann_ivf_sharded_recall_audit", _SHARDED_RECALL_SQL)
 def ann_ivf_sharded_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the two-level IVF probe vs brute force — prices the
     PRODUCT of both pruning levels (a true neighbor can fall outside the
@@ -754,25 +691,7 @@ def ann_ivf_sharded_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_recall_audit (one-level nprobe): the gap between them is what
     the second routing level costs on this corpus, against the fold
     savings it buys past the flat-codebook rung cap."""
-    from ..session import tracked_persist
-    from .similarity import ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(
-        ann_ivf_sharded_topk(spark, sf_dir).select("vec_id")
-    )
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return hit.select(
-        F.lit(IVF_TOP).cast("long").alias("k"),
-        "n_overlap",
-        F.round(
-            F.col("n_overlap").cast("double") / IVF_TOP, 6
-        ).alias("recall_at_k"),
-    )
+    return _sharded_recall(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -794,12 +713,7 @@ def _ivfpq_sql() -> str:
     )
 
     return f"""WITH {_fit_ctes_dyn()},
-    q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-    qd AS (
-      SELECT c.cid, {_dist_sql('q.q_emb', 'c.c')} AS d
-      FROM c1v c, q
-    ),
-    sel AS (SELECT cid FROM qd ORDER BY d ASC, cid ASC LIMIT {NPROBE}),
+    {route_ctes(NPROBE)},
     lut AS (SELECT {_pq_lut_cols_sql()} FROM q, {_pq_seeds_sql()}),
     cws AS (SELECT {_pq_cw_list_sql()} AS cw FROM {_pq_seeds_sql()}),
     codes AS (
@@ -857,8 +771,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import storage
     from .similarity import (
         PQ_TOP,
-        dot_fold_sql,
-        pq_adc_col,
+        adc_cut,
         pq_codes_frame,
         pq_query_lut,
         pq_seed_vectors,
@@ -868,40 +781,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir)["embeddings"]
     seeds = pq_seed_vectors(spark, sf_dir)
     q_vec = seeds[0]  # vec_id 0 doubles as the query vector
-
-    def d2(c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    sel = sorted(range(len(cents)), key=lambda i: (d2(cents[i]), i))[:NPROBE]
+    sel = route(q_vec, cents, NPROBE)
     codes = storage.read_ivfpq_codes(spark, sf_dir, len(cents))
     if codes is None:
         codes = pq_codes_frame(spark, sf_dir).join(asg, "vec_id")
     lut = pq_query_lut(seeds, q_vec)
-    cand = tracked_persist(
-        codes.where(F.col("cid").isin(sel) & (F.col("vec_id") != 0))
-        .select("vec_id", pq_adc_col(lut).alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(IVFPQ_CAND)
-    )
-    # one-parse SQL text (r13): same trees as the old Column-DSL chain
-    q = emb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
-    return (
-        emb.join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(PQ_TOP)
-    )
+    cand = tracked_persist(adc_cut(codes, sel, lut, IVFPQ_CAND))
+    return exact_topk(emb.join(F.broadcast(cand), "vec_id"), emb, PQ_TOP)
 
 
 # ---------------------------------------------------------------------------

@@ -42,17 +42,22 @@ from ..session import tracked_persist
 from ..driver_queries import _t, memoize_df, register
 from .clustering import _dec
 from .similarity import (
+    CORPUS,
     PQ_CAND,
     PQ_DSUB,
     PQ_K,
     PQ_S,
     PQ_TOP,
     _cos_sql,
+    adc_cut,
+    exact_topk,
     pq_adc_col,
     pq_code_expr,
     pq_encode,
     pq_query_lut,
     pq_seed_vectors,
+    recall_at_k,
+    route,
 )
 
 PQT_ITERS = 2  # assign+update rounds, same depth as the coarse fit
@@ -199,31 +204,6 @@ def _assigned_slices(emb: DataFrame, vseeds: list[list[float]]) -> DataFrame:
 
 
 
-def _rerank_exact(emb, cand, top: int):
-    """Exact-cosine rerank of an ADC candidate frame (vec_id, approx)
-    against the query vector (vec_id 0): the shared tail of every PQ /
-    IVF-PQ probe. One-parse SQL text (r13) — same Catalyst trees as the
-    old per-site Column-DSL chains (dot_fold_sql parity pinned in
-    tests/test_sql_expr_parity.py)."""
-    from .similarity import dot_fold_sql
-
-    q = emb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
-    return (
-        emb.join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(top)
-    )
-
-
 def pq_train_fit(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """Train the per-subspace codebooks; returns them as PQ_K "virtual
     seed" vectors (virtual seed k = concat over s of codeword cb[s][k])
@@ -364,12 +344,8 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_vec = [float(x) for x in q_row["embedding"]]
     lut = pq_query_lut(vseeds, q_vec)
     codes = pq_encode(emb, vseeds).filter(F.col("vec_id") != 0)
-    cand = tracked_persist(
-        codes.select("vec_id", pq_adc_col(lut).alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(PQ_CAND)
-    )
-    return _rerank_exact(emb, cand, PQ_TOP)
+    cand = tracked_persist(adc_cut(codes, None, lut, PQ_CAND))
+    return exact_topk(emb.join(F.broadcast(cand), "vec_id"), emb, PQ_TOP)
 
 
 # ---------------------------------------------------------------------------
@@ -490,19 +466,7 @@ def ann_ivfpq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir)["embeddings"]
     seeds = pq_seed_vectors(spark, sf_dir)
     q_vecs = seeds[:BATCH_Q]  # vec 0..B-1 double as the query batch
-
-    def d2(q_vec, c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    sel = {
-        q: sorted(range(len(cents)), key=lambda i: (d2(q_vecs[q], cents[i]), i))[
-            :NPROBE
-        ]
-        for q in range(BATCH_Q)
-    }
+    sel = {q: route(q_vecs[q], cents, NPROBE) for q in range(BATCH_Q)}
     cells = sorted({c for cs in sel.values() for c in cs})
     codes = storage.read_ivfpq_codes(spark, sf_dir, len(cents))
     if codes is None:
@@ -584,7 +548,7 @@ def _ivfpq_trained_sql(
     corpus), ``fit`` swaps the width-generic coarse fit for a fixed-width
     one (the fixture fits at k = CF_C), ``cand`` resizes the ADC cut —
     defaults reproduce the corpus oracle byte-for-byte."""
-    from .clustering import NPROBE, _dist_sql, _fit_ctes_dyn
+    from .clustering import NPROBE, _fit_ctes_dyn, route_ctes
 
     final = PQT_ITERS
     pav_cols = ", ".join(
@@ -594,12 +558,7 @@ def _ivfpq_trained_sql(
     return f"""
     WITH {pre}{fit if fit is not None else _fit_ctes_dyn()},
     {_train_ctes('t_')},
-    q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-    qd AS (
-      SELECT c.cid, {_dist_sql('q.q_emb', 'c.c')} AS d
-      FROM c1v c, q
-    ),
-    sel AS (SELECT cid FROM qd ORDER BY d ASC, cid ASC LIMIT {NPROBE}),
+    {route_ctes(NPROBE)},
     lutl AS (
       SELECT sq.s, {_ds_expr()} AS ds
       FROM t_sl sq JOIN t_cwl{final - 1} USING (s)
@@ -655,65 +614,25 @@ def ann_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vseeds = pq_train_fit(spark, sf_dir)
     q_row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
     q_vec = [float(x) for x in q_row["embedding"]]
-
-    def d2(c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    sel = sorted(range(len(cents)), key=lambda i: (d2(cents[i]), i))[:NPROBE]
+    sel = route(q_vec, cents, NPROBE)
     codes = pq_encode(emb, vseeds).join(asg, "vec_id")
     lut = pq_query_lut(vseeds, q_vec)
-    cand = tracked_persist(
-        codes.where(F.col("cid").isin(sel) & (F.col("vec_id") != 0))
-        .select("vec_id", pq_adc_col(lut).alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(IVFPQT_CAND)
-    )
-    return _rerank_exact(emb, cand, PQ_TOP)
+    cand = tracked_persist(adc_cut(codes, sel, lut, IVFPQT_CAND))
+    return exact_topk(emb.join(F.broadcast(cand), "vec_id"), emb, PQ_TOP)
 
 
-def _ivfpq_trained_recall_sql() -> str:
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id
-      FROM ({brute}) e JOIN ({_ivfpq_trained_sql()}) a USING (vec_id)
-    )
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / 10, 6) AS recall_at_k
-    """
+_IVFPQT_RECALL_SQL, _ivfpq_trained_recall = recall_at_k(
+    _ivfpq_trained_sql(), ann_ivfpq_trained_topk, CORPUS
+)
 
 
-@register("ivfpq_trained_recall_audit", _ivfpq_trained_recall_sql())
+@register("ivfpq_trained_recall_audit", _IVFPQT_RECALL_SQL)
 def ivfpq_trained_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the fully-trained IVF-PQ composition vs brute-force
     cosine — read NEXT TO ivfpq_recall_audit (seeded fine codebooks): the
     pair prices what training the fine quantizer buys INSIDE the cell
     pruning, per corpus."""
-    from .similarity import ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(ann_ivfpq_trained_topk(spark, sf_dir).select("vec_id"))
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return hit.select(
-        F.lit(10).cast("long").alias("k"),
-        "n_overlap",
-        F.round(F.col("n_overlap").cast("double") / 10, 6).alias("recall_at_k"),
-    )
+    return _ivfpq_trained_recall(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -738,7 +657,7 @@ def _ivfpq_residual_sql(
     """Oracle for the residual composition; ``pre``/``fit``/``cand`` as in
     _ivfpq_trained_sql — defaults reproduce the corpus oracle byte-for-
     byte, the clustered fixture passes its shadow CTEs + fixed-width fit."""
-    from .clustering import NPROBE, _dist_sql, _fit_ctes_dyn
+    from .clustering import NPROBE, _fit_ctes_dyn, route_ctes
 
     pav_cols = ", ".join(
         f"max(CASE WHEN s = {s} THEN lv END) AS l{s}" for s in range(PQ_S)
@@ -763,12 +682,7 @@ def _ivfpq_residual_sql(
       JOIN rsd kv ON kv.vec_id = t2.k
     ),
     rcwl AS (SELECT s, list(cw ORDER BY k) AS cws FROM rcw0 GROUP BY s),
-    q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
-    qd AS (
-      SELECT c.cid, {_dist_sql('q.q_emb', 'c.c')} AS d
-      FROM c1v c, q
-    ),
-    sel AS (SELECT cid FROM qd ORDER BY d ASC, cid ASC LIMIT {NPROBE}),
+    {route_ctes(NPROBE)},
     qr AS (
       SELECT c.cid,
              list_transform(generate_series(1, {_DIM}),
@@ -837,14 +751,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir)["embeddings"]
     seeds = pq_seed_vectors(spark, sf_dir)
     q_vec = seeds[0]
-
-    def d2(c):
-        acc = 0.0
-        for x, y in zip(q_vec, c):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    sel = sorted(range(len(cents)), key=lambda i: (d2(cents[i]), i))[:NPROBE]
+    sel = route(q_vec, cents, NPROBE)
     cdf = F.broadcast(
         spark.createDataFrame(
             [(i, cents[i]) for i in range(len(cents))],
@@ -870,106 +777,37 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [seeds[k][j] - cents[cid_of[k]][j] for j in range(_DIM)]
         for k in range(PQ_K)
     ]
-    codes = pq_encode(resid, rseeds, keep=("cid",)).where(
-        F.col("cid").isin(sel) & (F.col("vec_id") != 0)
-    )
+    codes = pq_encode(resid, rseeds, keep=("cid",))
     luts = {
         c: pq_query_lut(rseeds, [q_vec[j] - cents[c][j] for j in range(_DIM)])
         for c in sel
     }
-    # CASE over the NPROBE per-cell LUTs, built as a properly NESTED
-    # when/otherwise chain: Column.otherwise applies at most once per
-    # when() node, so the old flat ``approx.otherwise(term)`` loop raised
-    # for NPROBE > 2 (ADVICE r8 #2) — fold from the last cell outward
-    approx = pq_adc_col(luts[sel[-1]])
-    for c in reversed(sel[:-1]):
-        approx = F.when(F.col("cid") == c, pq_adc_col(luts[c])).otherwise(approx)
-    cand = tracked_persist(
-        codes.select("vec_id", approx.alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(IVFPQR_CAND)
-    )
-    return _rerank_exact(emb, cand, PQ_TOP)
+    cand = tracked_persist(adc_cut(codes, sel, luts, IVFPQR_CAND))
+    return exact_topk(emb.join(F.broadcast(cand), "vec_id"), emb, PQ_TOP)
 
 
-def _ivfpq_residual_recall_sql() -> str:
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id
-      FROM ({brute}) e JOIN ({_ivfpq_residual_sql()}) a USING (vec_id)
-    )
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / 10, 6) AS recall_at_k
-    """
+_IVFPQR_RECALL_SQL, _ivfpq_residual_recall = recall_at_k(
+    _ivfpq_residual_sql(), ann_ivfpq_residual_topk, CORPUS
+)
 
 
-@register("ivfpq_residual_recall_audit", _ivfpq_residual_recall_sql())
+@register("ivfpq_residual_recall_audit", _IVFPQR_RECALL_SQL)
 def ivfpq_residual_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of residual IVF-PQ vs brute-force cosine — read next to
     ivfpq_recall_audit (plain codes) and ivfpq_trained_recall_audit: the
     trio prices what residual encoding buys at the same code budget."""
-    from .similarity import ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(ann_ivfpq_residual_topk(spark, sf_dir).select("vec_id"))
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return hit.select(
-        F.lit(10).cast("long").alias("k"),
-        "n_overlap",
-        F.round(F.col("n_overlap").cast("double") / 10, 6).alias("recall_at_k"),
-    )
+    return _ivfpq_residual_recall(spark, sf_dir)
 
 
-def _pq_trained_recall_sql() -> str:
-    brute = f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """
-    return f"""
-    WITH hit AS (
-      SELECT e.vec_id
-      FROM ({brute}) e JOIN ({_pq_trained_sql()}) a USING (vec_id)
-    )
-    SELECT CAST(10 AS BIGINT) AS k,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
-           round((SELECT count(*) FROM hit)::DOUBLE / 10, 6) AS recall_at_k
-    """
+_PQT_RECALL_SQL, _pq_trained_recall = recall_at_k(
+    _pq_trained_sql(), ann_pq_trained_topk, CORPUS
+)
 
 
-@register("pq_trained_recall_audit", _pq_trained_recall_sql())
+@register("pq_trained_recall_audit", _PQT_RECALL_SQL)
 def pq_trained_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the trained-codebook PQ pipeline vs brute-force cosine
     — read NEXT TO pq_recall_audit (the seeded baseline): the pair prices
     what training buys on this corpus, per corpus, as a measured number
     rather than an assumption that training helps."""
-    from .similarity import ann_topk_bruteforce
-
-    exact = tracked_persist(
-        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
-    )
-    approx = tracked_persist(ann_pq_trained_topk(spark, sf_dir).select("vec_id"))
-    hit = exact.join(approx, "vec_id", "left_semi").agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return hit.select(
-        F.lit(10).cast("long").alias("k"),
-        "n_overlap",
-        F.round(F.col("n_overlap").cast("double") / 10, 6).alias("recall_at_k"),
-    )
+    return _pq_trained_recall(spark, sf_dir)

@@ -18,6 +18,8 @@ north-star) for an incoming batch vs the corpus.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,20 +68,24 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
+def brute_force_sql(k: int = 10, src: str = "embeddings") -> str:
+    """The exact cosine top-k of query vec 0 over ``src`` as DuckDB text:
+    ann_topk_bruteforce's oracle and the ground truth of every recall
+    audit (``recall_at_k``)."""
+    return f"""
+    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
+    FROM {src} e
+    CROSS JOIN (SELECT embedding FROM {src} WHERE vec_id = 0) q
+    WHERE e.vec_id <> 0
+    ORDER BY cos DESC, e.vec_id ASC
+    LIMIT {k}
+    """
+
+
 # ---------------------------------------------------------------------------
 # brute-force cosine top-k
 # ---------------------------------------------------------------------------
-@register(
-    "ann_topk_bruteforce",
-    f"""
-    SELECT e.vec_id, {_cos_sql('e.embedding', 'q.embedding')} AS cos
-    FROM embeddings e
-    CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    WHERE e.vec_id <> 0
-    ORDER BY cos DESC, e.vec_id ASC
-    LIMIT 10
-    """,
-)
+@register("ann_topk_bruteforce", brute_force_sql())
 @memoize_df
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k: the 1-row query vector broadcasts; one scan computes
@@ -399,6 +405,62 @@ def cosine_sql(a: str, b: str) -> str:
     return (
         f"({dot_fold_sql(a, b)} / "
         f"(sqrt({dot_fold_sql(a, a)}) * sqrt({dot_fold_sql(b, b)})))"
+    )
+
+
+# ---------------------------------------------------------------------------
+# the ANN probe kernel: every IVF / PQ / IVF-PQ probe routes with
+# ``route``, cuts ADC candidates with ``adc_cut``, ends in ``exact_topk``
+# and is audited by ``recall_at_k`` (docs/VECTOR_INDEXES.md)
+# ---------------------------------------------------------------------------
+
+
+def route(q_vec: list[float], cents: list[list[float]], nprobe: int) -> list[int]:
+    """Driver-side cell routing: the ``nprobe`` cells whose centroids are
+    nearest ``q_vec``, nearest first, ties to the lower cell id. The
+    squared distance is the left-to-right double fold the SQL twin's
+    ``qd`` CTE runs (clustering.route_ctes), so both engines pick the
+    same cells."""
+    keyed = []
+    for i, c in enumerate(cents):
+        acc = 0.0
+        for x, y in zip(q_vec, c):
+            acc = acc + (x - y) * (x - y)
+        keyed.append((acc, i))
+    return [i for _, i in sorted(keyed)[:nprobe]]
+
+
+def exact_topk(
+    rows: DataFrame,
+    q_src: DataFrame,
+    top: int,
+    *q_cols: str,
+    where: Column | None = None,
+) -> DataFrame:
+    """The exact-cosine tail of every probe: candidate ``rows``
+    (vec_id, embedding) against the query vector — vec_id 0 of ``q_src``
+    as one broadcast row with its norm (plus any ``q_cols``) — best
+    ``top`` by cosine, ties on the lower vec_id. ``where`` filters the
+    candidate x query pairs (the own-cell probe matches the query's
+    cell). One-parse SQL text: the same trees as the old per-site
+    Column-DSL chains (dot_fold_sql parity pinned in
+    tests/test_sql_expr_parity.py)."""
+    q = q_src.filter(F.col("vec_id") == 0).selectExpr(
+        "embedding AS q_emb",
+        *q_cols,
+        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
+    )
+    scored = rows.crossJoin(F.broadcast(q))
+    if where is not None:
+        scored = scored.where(where)
+    return (
+        scored.selectExpr(
+            "vec_id",
+            f"({dot_fold_sql('embedding', 'q_emb')} / "
+            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
+        )
+        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+        .limit(top)
     )
 
 
@@ -1432,6 +1494,30 @@ def pq_adc_col(lut: list[list[float]]) -> Column:
     return F.expr(pq_adc_expr(lut))
 
 
+def adc_cut(codes: DataFrame, cells: list[int] | None, lut, cut: int) -> DataFrame:
+    """The ADC candidate cut of every PQ / IVF-PQ probe: (vec_id, approx)
+    for the ``cut`` code rows nearest the query by ADC distance, ties on
+    the lower vec_id. With routed ``cells`` the scan keeps those cells'
+    rows minus the query vector (vec_id 0); with None, ``codes`` already
+    is the scanned set. ``lut`` is one S x K table, or for residual codes
+    ``{cid: table}`` over the routed cells — a nested when/otherwise
+    chain built from the last cell outward (Column.otherwise applies at
+    most once per when() node, ADVICE r8 #2). Persists nothing."""
+    if cells is not None:
+        codes = codes.where(F.col("cid").isin(cells) & (F.col("vec_id") != 0))
+    if isinstance(lut, dict):
+        approx = pq_adc_col(lut[cells[-1]])
+        for c in reversed(cells[:-1]):
+            approx = F.when(F.col("cid") == c, pq_adc_col(lut[c])).otherwise(approx)
+    else:
+        approx = pq_adc_col(lut)
+    return (
+        codes.select("vec_id", approx.alias("approx"))
+        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
+        .limit(cut)
+    )
+
+
 @register("ann_pq_topk", _pq_sql())
 @memoize_df
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1455,30 +1541,11 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_vec = seeds[0]  # vec_id 0 doubles as the query vector
     lut = pq_query_lut(seeds, q_vec)
     codes = pq_codes_frame(spark, sf_dir).filter(F.col("vec_id") != 0)
-    adc = pq_adc_col(lut)
     # ADC candidates carry (vec_id, approx) only; the PQ_CAND survivors
     # broadcast into one embeddings scan to fetch their full vectors for
     # the exact rerank — the codes path never ships raw embeddings
-    cand = (
-        codes.select("vec_id", adc.alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("vec_id").asc())
-        .limit(PQ_CAND)
-    )
-    q = emb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS q_emb",
-        f"sqrt({dot_fold_sql('embedding', 'embedding')}) AS q_norm",
-    )
-    return (
-        emb.join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .selectExpr(
-            "vec_id",
-            f"({dot_fold_sql('embedding', 'q_emb')} / "
-            f"(sqrt({dot_fold_sql('embedding', 'embedding')}) * q_norm)) AS cos",
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(PQ_TOP)
-    )
+    cand = adc_cut(codes, None, lut, PQ_CAND)
+    return exact_topk(emb.join(F.broadcast(cand), "vec_id"), emb, PQ_TOP)
 
 
 # ---------------------------------------------------------------------------
@@ -1523,3 +1590,65 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id", "cos", F.col("rk").cast("long").alias("rk"))
         .orderBy(F.col("q_id").asc(), F.col("rk").asc())
     )
+
+
+# ---------------------------------------------------------------------------
+# recall@k audits: an ANN probe's top-k against the exact top-k
+# ---------------------------------------------------------------------------
+
+
+class RecallBaseline(NamedTuple):
+    """The exact side of a recall@k audit: ``oracle(k)`` is the
+    brute-force DuckDB text spliced into the audit oracle, ``exact`` the
+    Spark (vec_id) frame of the exact top-k, and ``hold`` how the audit
+    holds the probe's (vec_id) frame."""
+
+    oracle: Callable[[int], str]
+    exact: Callable[[SparkSession, str], DataFrame]
+    hold: Callable[[DataFrame], DataFrame]
+
+
+# the registered corpus: ann_topk_bruteforce is the exact side, and both
+# sides' 10-row id frames are held for the semi-join
+CORPUS = RecallBaseline(
+    oracle=brute_force_sql,
+    exact=lambda spark, sf_dir: tracked_persist(
+        ann_topk_bruteforce(spark, sf_dir).select("vec_id")
+    ),
+    hold=tracked_persist,
+)
+
+
+def recall_at_k(
+    probe_sql: str,
+    probe: Callable[[SparkSession, str], DataFrame],
+    baseline: RecallBaseline,
+    k: int = 10,
+) -> tuple[str, Callable[[SparkSession, str], DataFrame]]:
+    """(oracle SQL, Spark builder) of one recall@k audit row: (k,
+    n_overlap, recall_at_k) of ``probe``'s top-k against the baseline's
+    exact top-k. The oracle joins the brute-force text with the probe's
+    own oracle ``probe_sql``; the Spark side semi-joins the two id
+    frames."""
+    sql = f"""
+    WITH hit AS (
+      SELECT e.vec_id FROM ({baseline.oracle(k)}) e JOIN ({probe_sql}) a USING (vec_id)
+    )
+    SELECT CAST({k} AS BIGINT) AS k,
+           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_overlap,
+           round((SELECT count(*) FROM hit)::DOUBLE / {k}, 6) AS recall_at_k
+    """
+
+    def frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+        exact = baseline.exact(spark, sf_dir)
+        approx = baseline.hold(probe(spark, sf_dir).select("vec_id"))
+        hit = exact.join(approx, "vec_id", "left_semi").agg(
+            F.expr("CAST(count(*) AS BIGINT) AS n_overlap")
+        )
+        return hit.selectExpr(
+            f"CAST({k} AS BIGINT) AS k",
+            "n_overlap",
+            f"round(CAST(n_overlap AS DOUBLE) / {k}, 6) AS recall_at_k",
+        )
+
+    return sql, frame

@@ -177,84 +177,3 @@ _TPCH_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
 def register_views(tables: dict[str, DataFrame]) -> None:
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
-
-
-def merge_into_partitioned(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    delta: DataFrame,
-    keys: list[str] | None = None,
-    seq_col: str | None = None,
-) -> list:
-    """Partition-scoped upsert: merge ``delta`` into the on-disk table
-    touching ONLY the partitions (e.g. tokens) present in the delta.
-
-    This is the 100 TB write path: a micro-batch touching 3 tokens reads
-    and rewrites 3 partition directories, not the table. Requires the table
-    to be disk-partitioned (PARTITION_COLUMNS).
-
-    The backend is pure Spark: read touched partitions, last-writer-wins
-    merge (operators/merge.merge_upsert), dynamic partition overwrite — no
-    dependencies beyond parquet, and batch-level idempotence comes from the
-    runner's journaled swap + block high-water mark. On a deployment with a
-    lakehouse format (Delta/Iceberg), a transactional ``MERGE INTO`` with a
-    partition-pruning predicate slots in at this same call site; the repo
-    ships only the dependency-free path since that is the one it can test.
-
-    Returns the list of touched partition values (for logging/metrics).
-    """
-    from pyspark.sql import functions as F
-
-    from . import schemas as _schemas
-    from .operators.merge import merge_upsert
-
-    part_cols = PARTITION_COLUMNS.get(name)
-    bucketed = not part_cols and name in HASH_BUCKETS
-    if not part_cols and not bucketed:
-        raise ValueError(f"{name} is not partition-keyed; use write_table")
-    if part_cols and len(part_cols) != 1:
-        raise NotImplementedError("single partition column expected")
-    keys = keys or _schemas.UPSERT_KEYS[name]
-    if bucketed:
-        pcol = BUCKET_COL
-        delta = delta.withColumn(pcol, bucket_expr(name))
-    else:
-        pcol = part_cols[0]
-
-    touched = [r[0] for r in delta.select(pcol).distinct().collect()]
-    if not touched:
-        return []  # empty delta: nothing to merge, nothing to rewrite
-    path = os.path.join(root, name)
-    existing = [
-        v for v in touched
-        if os.path.isdir(os.path.join(path, f"{pcol}={v}"))
-    ]
-    if existing:
-        target = (
-            spark.read.option("basePath", path)
-            .schema(_schemas.STATE_TABLES[name])
-            .parquet(*[os.path.join(path, f"{pcol}={v}") for v in existing])
-        ).drop(BUCKET_COL)
-    else:
-        target = empty_table(spark, name)
-
-    merged = conform(
-        merge_upsert(target, delta.drop(BUCKET_COL), keys, seq_col=seq_col), name
-    )
-    if bucketed:
-        merged = merged.withColumn(pcol, bucket_expr(name))
-    # self-overwrite safety: materialize before replacing the source files
-    merged = merged.localCheckpoint(eager=True)
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        sort_cols = [HASH_BUCKETS[name][0]] if bucketed else SORT_COLUMNS.get(name, [])
-        writer = merged.repartition(pcol)
-        if sort_cols:
-            writer = writer.sortWithinPartitions(pcol, *sort_cols)
-        writer.write.mode("overwrite").partitionBy(pcol).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    return touched

@@ -133,32 +133,6 @@ def test_l1_batch_without_comments_skips_meta_write(spark, tmp_path):
     assert _digests(str(tmp_path), "post_metadata") == before
 
 
-def test_merge_into_bucketed_table(spark, tmp_path):
-    root = str(tmp_path)
-    first = spark.createDataFrame(
-        [("@a/p1", "b1", "{}", "", 0, None, "/cat/@a/p1", 0)],
-        schemas.POST_METADATA,
-    )
-    tables.write_table(first, root, "post_metadata")
-    delta = spark.createDataFrame(
-        [
-            ("@a/p1", "b1-edited", "{}", "", 0, None, "/cat/@a/p1", 0),
-            ("@x/new", "fresh", "{}", "", 0, None, "/cat/@x/new", 0),
-        ],
-        schemas.POST_METADATA,
-    )
-    touched = tables.merge_into_partitioned(spark, root, "post_metadata", delta)
-    assert set(touched) == {
-        tables.bucket_of("@a/p1", "post_metadata"),
-        tables.bucket_of("@x/new", "post_metadata"),
-    }
-    rows = {
-        r["authorperm"]: r["body"]
-        for r in tables.read_table(spark, root, "post_metadata").collect()
-    }
-    assert rows == {"@a/p1": "b1-edited", "@x/new": "fresh"}
-
-
 def test_l1_batch_rewrites_only_touched_posts_tokens(spark, tmp_path):
     runner = DualStreamRunner(spark, str(tmp_path))
     state = {n: tables.empty_table(spark, n) for n in schemas.STATE_TABLES}

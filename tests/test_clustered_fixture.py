@@ -193,6 +193,7 @@ def test_cold_query_cell_degrades_like_sql(spark, tmp_path, monkeypatch):
     unconditional level-2 fit, no candidates — in the store-read path
     (meta lacks the query cell) and the live path (hot gate fails)."""
     from distribution_engine_smt_spark.operators import storage as st
+    from distribution_engine_smt_spark.pipeline.similarity import route
 
     # store-read branch: real store, meta doctored so the query cell
     # has no level-2 fit
@@ -200,10 +201,7 @@ def test_cold_query_cell_degrades_like_sql(spark, tmp_path, monkeypatch):
     st.build_clustered_mass_fit_store(spark, SF_DIR)
     stored, meta = st.read_clustered_mass_fit(spark)
     q = cf.cm_point(0)
-    cid0 = min(
-        range(len(meta["cents1"])),
-        key=lambda i: (cf._cf_d2(q, meta["cents1"][i]), i),
-    )
+    cid0 = route(q, meta["cents1"], 1)[0]
     assert cid0 in meta["level2"]  # the fixture's query cell IS hot
     cold_meta = dict(meta)
     cold_meta["level2"] = {

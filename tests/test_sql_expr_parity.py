@@ -399,3 +399,44 @@ def test_spliced_sql_words_reject_quote_bearing_values(spark):
     edges = spark.createDataFrame([(1, 0)], "id INT, parent INT")
     with pytest.raises(ValueError):
         expand_tree(edges, edges, "id", "parent` AS x, `id")
+
+
+def test_route_matches_the_routing_cte_twin():
+    """``similarity.route`` (driver-side cell routing) and
+    ``clustering.route_ctes`` (its DuckDB twin, shared by the IVF / IVF-PQ
+    oracles) pick the same cells on a hand-made centroid table with an
+    exact distance tie, for every nprobe up to past the cell count. The
+    prefix sets pin the order: nearest first, a tie to the lower cid."""
+    import duckdb
+
+    from distribution_engine_smt_spark.pipeline.clustering import route_ctes
+    from distribution_engine_smt_spark.pipeline.similarity import DIM, route
+
+    def vec(x0: float, x1: float) -> list[float]:
+        return [x0, x1] + [0.0] * (DIM - 2)
+
+    q = vec(1.0, 0.5)
+    cents = [
+        vec(3.0, 0.5),  # d = 4 (nearer than cid 4 by L1 distance)
+        vec(1.0, 0.5),  # d = 0
+        vec(2.0, 0.5),  # d = 1, tied with cid 3: the lower cid wins
+        vec(0.0, 0.5),  # d = 1
+        vec(2.25, 1.75),  # d = 3.125
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id INTEGER, embedding FLOAT[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)", [(0, q), (7, vec(9.0, 9.0))]
+    )
+    con.execute("CREATE TABLE c1v (cid INTEGER, c DOUBLE[])")
+    con.executemany("INSERT INTO c1v VALUES (?, ?)", list(enumerate(cents)))
+    assert route(q, cents, len(cents)) == [1, 2, 3, 4, 0]
+    for nprobe in range(1, len(cents) + 2):
+        sel = {
+            r[0]
+            for r in con.execute(
+                f"WITH {route_ctes(nprobe)} SELECT cid FROM sel"
+            ).fetchall()
+        }
+        assert sel == set(route(q, cents, nprobe))
+        assert route(q, cents, nprobe) == [1, 2, 3, 4, 0][:nprobe]

@@ -6,6 +6,7 @@ adds) the voter's contribution."""
 from __future__ import annotations
 
 import json
+import os
 from decimal import Decimal
 
 from distribution_engine_smt_spark.streaming.stateful import (
@@ -195,18 +196,24 @@ def test_zscore_stream_drain_equals_batch(spark, tmp_path):
         f"SELECT event_id, user_id, CAST(ts AS VARCHAR) AS ts, value"
         f" FROM '{sf}/events.parquet' ORDER BY ts, event_id"
     ).fetchall()
-    # three chronological chunks: every user's history crosses batches
+    # three chronological chunks: every user's history crosses batches.
+    # The file source feeds new files in modification-time order (ties in
+    # directory-listing order), so the chunks get strictly increasing
+    # mtimes: files written back to back can share one, and a later chunk
+    # fed first breaks the chronology the z-score state depends on.
     src = tmp_path / "events"
     src.mkdir()
     third = len(ev) // 3
     for i, chunk in enumerate([ev[:third], ev[third : 2 * third], ev[2 * third :]]):
+        path = src / f"b{i}.json"
         _write(
-            src / f"b{i}.json",
+            path,
             [
                 {"event_id": e, "user_id": u, "ts": t, "value": v}
                 for e, u, t, v in chunk
             ],
         )
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema(
             "event_id long, user_id long, ts timestamp, value double"
@@ -228,7 +235,7 @@ def test_zscore_stream_drain_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180), "the stream did not drain within 180 s"
 
     batch = {
         r["event_id"]: (r["user_id"], r["n"], r["z"], r["is_anomaly"])

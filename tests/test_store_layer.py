@@ -157,3 +157,35 @@ def test_rewritten_input_renames_the_store(store_dir, tmp_path):
     # a store built for the old input is never found for the new one
     _fill(before, "stale")
     assert storage.read_dedup_pairs(None, sf) is None
+
+
+def test_stale_fixture_fit_store_fails_fast(store_dir):
+    """The cf/cmass fixture fit stores derive from code constants, so no
+    input fingerprint names them: their sidecar carries the generator's
+    fingerprint, and a store written by another generator raises on
+    every read, naming the store, instead of serving stale rows."""
+    cf = storage.clustered_cf_fit_store_path()
+    cm = storage.clustered_mass_fit_store_path()
+    reads = {
+        cf: (
+            lambda: storage.read_clustered_cf_fit(None),
+            lambda: storage.read_clustered_cf_codes(None, "trained"),
+            lambda: storage.read_clustered_cf_ksplit(None),
+        ),
+        cm: (lambda: storage.read_clustered_mass_fit(None),),
+    }
+    for path, fns in reads.items():
+        storage._write_json(path, {"generator": "0" * 16})
+        for read in fns:
+            with pytest.raises(ValueError, match=os.path.basename(path)):
+                read()
+    # the live generator's fingerprint passes the check
+    from distribution_engine_smt_spark.pipeline.clustered import cf_point
+
+    storage._write_json(cf, {"generator": storage._generator_fingerprint(cf_point)})
+    assert storage.read_clustered_cf_codes(None, "trained") is None
+    # nothing was built: only the two hand-written sidecars exist
+    assert sorted(os.listdir(store_dir)) == sorted(
+        os.path.basename(p) for p in (cf, cm)
+    )
+    assert sorted(os.listdir(cf)) == sorted(os.listdir(cm)) == ["_meta.json"]
