@@ -9,13 +9,17 @@ correctness gate. Implementations live in
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from distribution_engine_smt_spark import driver_queries  # noqa: E402
 from distribution_engine_smt_spark import pipeline  # noqa: E402,F401  (registers extension queries)
@@ -29,210 +33,44 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver caps its oracle pass at 50 queries per round (observed in r2;
-# see docs/PLANS.md "Driver 50-query cap"), so we rotate. The r14 head is
-# (1) the 22 queries last driver-green in r09, whose evidence would reach
-# age 5 in r14 (tests/test_local_correctness.py enforces the <= 4 bound),
-# then (2) 20 of the stalest r10-green queries, then (3) the 8
-# _ROUND_MODIFIED representatives below, exactly 50 in all. Every
-# r13-modified query was driver-green in CORRECTNESS_r13.json.
-_DRIVER_PRIORITY = [
-    # --- last driver-green r09: MUST lead the r14 head
-    "discussions_by_hot",
-    "discussions_by_payout_keyset",
-    "discussions_by_trending",
-    "json_double_decode",
-    "json_props_sum",
-    "multimodal_decode",
-    "multimodal_metadata_stats",
-    "pack_sequences",
-    "prefix_select",
-    "quality_filter",
-    "recent_orders_window",
-    "reward_curves",
-    "segment_nation_counts",
-    "stratified_sample",
-    "supplier_visible_revenue",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality_score",
-    "text_repetition",
-    "text_token_counts",
-    "time_format_wire",
-    "trending_tags",
-    # --- stalest fill (last driver-green r10)
-    "clustered_adaptive_occupancy_audit",
-    "daily_moving_avg",
-    "discussions_by_promoted",
-    "embedding_lsh_flips1_recall_audit",
-    "embedding_lsh_multiprobe_recall_audit",
-    "embedding_lsh_recall_audit",
-    "events_pivot",
-    "feed_semijoin",
-    "follow_counts",
-    "hll_distinct",
-    "hourly_hll_distinct",
-    "kmv_distinct",
-    "langid_confusion",
-    "latest_event_per_key",
-    "length_histogram",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "normalize_text",
-    "payout_accumulation",
-    "pii_redact",
-]
-# rotated past the 50-slot cap (regenerated each round so head + this =
-# registry). Under the representatives policy below this list MAY hold
-# queries touched this round, provided a family representative sits in
-# the head and the touched query itself is hash-checked locally
-# (tests/test_driver_queries.py at sf0.01 in the core or slow tier, and a
-# `local_correctness.py --only` run recorded in CHANGES.md); untouched
-# entries are green in an earlier CORRECTNESS_r*.json. Disjoint from
-# _DRIVER_PRIORITY and _ROUND_MODIFIED by construction (ADVICE r11 #3);
-# test_rotation_lists_are_disjoint pins it. The 19 r10-green names here
-# (post_with_votes, pricing_summary, range_join_events, reblogged_by_agg,
-# regional_revenue, replies_in_notin, sales_rollup, sampled_quantiles,
-# segment_region_cube, sessionize, set_diff_reconcile, shipping_priority,
-# sliding_event_counts, tag_membership, token_count_quantiles,
-# top_ngrams, tumbling_event_counts, url_density, weighted_sample) reach
-# the four-round evidence bound in r14 and must lead the r15 head.
-_DRIVER_ROTATE_LAST = [
-    "above_nation_avg_balance",
-    "account_history_page",
-    "adaptive_maintenance_audit",
-    "ann_ivf_kmeans_topk",
-    "ann_ivf_nprobe_topk",
-    "ann_ivf_sharded_topk",
-    "ann_ivf_topk",
-    "ann_ivfpq_batch",
-    "ann_ivfpq_residual_topk",
-    "ann_ivfpq_topk",
-    "ann_ivfpq_trained_topk",
-    "ann_pq_topk",
-    "ann_pq_trained_topk",
-    "ann_query_batch",
-    "ann_recall_audit",
-    "ann_sq8_topk",
-    "ann_topk_bruteforce",
-    "asof_purchase_attribution",
-    "authorperm_codec",
-    "balanced_sample",
-    "bigram_perplexity",
-    "blog_union_minjoin",
-    "bloom_membership",
-    "bm25_search",
-    "build_vocab",
-    "children_counts",
-    "chunk_dedup",
-    "chunk_documents",
-    "chunk_excise",
-    "clustered_adaptive_merge_audit",
-    "clustered_adaptive_probe_recall_audit",
-    "clustered_adaptive_semdedup_audit",
-    "clustered_adaptive_semdedup_w2_audit",
-    "clustered_adaptive_semdedup_w2k16_audit",
-    "clustered_adaptive_topk_p2",
-    "clustered_fixture_stats",
-    "clustered_ivf_occupancy_audit",
-    "clustered_ivfpq_residual_topk",
-    "clustered_ivfpq_trained_recall_audit",
-    "clustered_ivfpq_trained_topk",
-    "clustered_kmeans_agreement_audit",
-    "clustered_mass_fixture_stats",
-    "clustered_mass_occupancy_audit",
-    "clustered_mass_semdedup_audit",
-    "clustered_pq_variant_audit",
-    "clustered_semdedup_audit",
-    "cms_heavy_hitters",
-    "corpus_datasheet",
-    "cross_source_dup_matrix",
-    "curated_corpus",
-    "curriculum_buckets",
-    "decontaminate",
-    "dedup_best_representative",
-    "dedup_cluster_stats",
-    "dedup_clusters",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_embedding_lsh_flips1",
-    "dedup_embedding_lsh_flips3",
-    "dedup_embedding_lsh_multiprobe",
-    "dedup_embedding_lsh_single_probe",
-    "dedup_exact",
-    "dedup_exact_keep_first",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "deterministic_shuffle",
-    "discussions_by_created",
-    "doc_novelty",
-    "dup_inflation",
-    "earliest_event_per_user",
-    "embedding_dim_stats",
-    "embedding_kmeans",
-    "embedding_lsh_planted_recall_audit",
-    "embedding_outliers",
-    "event_funnel",
-    "event_zscore_anomaly",
-    "graph_pagerank",
-    "hard_negatives",
-    "hll_daily_merge",
-    "index_occupancy_audit",
-    "ivfpq_trained_recall_audit",
-    "kmv_set_ops",
-    "leakage_free_split",
-    "lsh_recall_audit",
-    "lsh_recall_audit_sampled",
-    "minhash_decontaminate",
-    "mixture_weights",
-    "post_with_votes",
-    "pq_recall_audit",
-    "pq_train",
-    "pricing_summary",
-    "quantile_error_audit",
-    "range_join_events",
-    "reblogged_by_agg",
-    "regional_revenue",
-    "replies_in_notin",
-    "rrf_hybrid_search",
-    "sales_rollup",
-    "sampled_quantiles",
-    "segment_region_cube",
-    "semdedup",
-    "sessionize",
-    "set_diff_reconcile",
-    "shipping_priority",
-    "sliding_event_counts",
-    "source_vocab_overlap",
-    "split_leakage_audit",
-    "substring_dup_spans",
-    "tag_membership",
-    "tfidf_keywords",
-    "thread_tree",
-    "token_count_quantiles",
-    "top_boilerplate_spans",
-    "top_ngrams",
-    "tumbling_event_counts",
-    "unigram_perplexity",
-    "url_density",
-    "weighted_sample",
-    "zipf_slope",
-]
+# see docs/PLANS.md "Driver 50-query cap"), so queries() emits the registry
+# in a rotation order computed from the committed driver evidence
+# (CORRECTNESS_r*.json): _ROUND_MODIFIED first, then queries with no driver
+# record, then the rest stalest first by (last driver-green round, name).
+# The stalest evidence therefore always re-enters the 50-query head;
+# tests/test_local_correctness.py pins the order against the evidence-age
+# bound.
+
+
+def _driver_evidence() -> tuple[int, set[str], dict[str, int]]:
+    """(newest recorded round, every query with a driver record,
+    {query: last driver-green round}). Green is a hash match, or a row
+    match with no error."""
+    max_round, recorded, green = 0, set(), {}
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        max_round = max(max_round, rnd)
+        with open(path) as f:
+            for q, rec in json.load(f).items():
+                recorded.add(q)
+                if rec.get("hash_match") or (rec.get("rows_match") and rec.get("err") is None):
+                    green[q] = max(green.get(q, 0), rnd)
+    return max_round, recorded, green
+
 
 # ROTATION POLICY (standing rule, not a one-off): any query whose
 # implementation changed during the CURRENT round must be covered by this
-# round's correctness evidence — family REPRESENTATIVES sit inside the
-# driver's top-50 (the cap cannot hold every touched query in a
-# kernel-conversion round; r12 set the precedent) and every touched query
-# is hash-checked in the committed LOCAL_CORRECTNESS full sweep. Only
-# queries green in 2+ prior rounds AND untouched this round may be
-# rotated past position 50.
-# tests/test_driver_queries.py::test_round_modified_queries_inside_driver_cap
-# enforces the placement (and that nothing listed here is simultaneously
-# rotated last). r14 routes the vector-index probes through one shared
-# kernel (route / adc_cut / exact_topk / recall_at_k) and fingerprints the
-# cf/cmass fixture fit stores; one representative per shape of the kernel:
+# round's correctness evidence — family REPRESENTATIVES are listed here and
+# lead the driver's top-50 (the cap cannot hold every touched query in a
+# kernel-conversion round; r12 set the precedent), and every touched query
+# is hash-checked in the committed LOCAL_CORRECTNESS full sweep. This list
+# is the rotation's only hand-kept input. r14 routes the vector-index
+# probes through one shared kernel (route / adc_cut / exact_topk /
+# recall_at_k) and fingerprints the cf/cmass fixture fit stores; one
+# representative per shape of the kernel:
 _ROUND_MODIFIED: list[str] = [
     "ann_ivf_kmeans_nprobe",  # route + exact_topk (serve suite query)
     "ann_ivf_sharded_recall_audit",  # two-level route + corpus recall
@@ -244,12 +82,15 @@ _ROUND_MODIFIED: list[str] = [
     "clustered_adaptive_topk_p1",  # exact_topk over routed leaf members
 ]
 
+
 def _ordered(names: list[str]) -> list[str]:
-    head = [n for n in _DRIVER_PRIORITY if n in names]
-    head += [n for n in _ROUND_MODIFIED if n in names and n not in head]
-    tail = [n for n in _DRIVER_ROTATE_LAST if n in names]
-    mid = [n for n in names if n not in set(head) | set(tail)]
-    return head + mid + tail
+    _, recorded, green = _driver_evidence()
+    head = [n for n in _ROUND_MODIFIED if n in names]
+    rest = sorted(
+        (n for n in names if n not in head),
+        key=lambda n: (n in recorded, green.get(n, 0), n),
+    )
+    return head + rest
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

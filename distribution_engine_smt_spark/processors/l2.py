@@ -182,7 +182,7 @@ def _batch_flags(ok: DataFrame) -> dict[str, bool]:
 def _ok_txs(txs: DataFrame) -> DataFrame:
     """Sequence + parse the tx log and apply the error-log gate (reference:
     custom_json_processor.py:50-66, engine_comments_contract_processor.py:33,42).
-    Map-only, so it works on batch and streaming frames alike."""
+    Map-only: one pass over the batch, no shuffle."""
     txs = txs.withColumn("seq", _seq()).withColumn(
         "parsed_logs", F.from_json(F.col("logs"), _EVENTS_SCHEMA)
     )
@@ -219,13 +219,6 @@ def _explode_events(comments_txs: DataFrame) -> DataFrame:
             F.concat(F.lit("@"), _payload("author"), F.lit("/"), _payload("permlink")),
         )
     )
-
-
-def parse_l2_events(txs: DataFrame) -> DataFrame:
-    """Raw tx rows -> exploded comments-contract event rows. Shared by the
-    batch path (apply_l2_batch) and the continuous vote-fold stream
-    (streaming/runner.run_l2_vote_stream); every step is map-only."""
-    return _explode_events(_ok_txs(txs).filter(F.col("contract") == "comments"))
 
 
 def parse_vote_rows(events: DataFrame) -> DataFrame:

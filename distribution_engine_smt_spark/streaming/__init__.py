@@ -4,7 +4,6 @@ from .runner import (
     l2_alignment_bound,
     run_l1_stream,
     run_l2_stream,
-    run_l2_vote_stream,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "l2_alignment_bound",
     "run_l1_stream",
     "run_l2_stream",
-    "run_l2_vote_stream",
 ]

@@ -5,7 +5,11 @@ stream_engine_sidechain_blocks.py); here each becomes a file-source
 ``readStream`` whose micro-batches are handed to the same pure batch
 functions (processors.apply_l1_batch / apply_l2_batch) inside
 ``foreachBatch`` — batch-first core, streaming as a thin shell
-(SURVEY.md §7 guiding shape).
+(SURVEY.md §7 guiding shape). The two batch handlers are the only
+writers of the state tables: ``process_l2_batch`` is the only code that
+folds L2 votes into posts, so the votes rows, ``posts.vote_rshares`` and
+the trend/hot scores move together, under the gates and the high-water
+mark below.
 
 Semantics mapped from the reference (§2.9):
 
@@ -31,7 +35,14 @@ Semantics mapped from the reference (§2.9):
   the reference assumes: block N+1 is never delivered before block N, and
   all ops of one block share the block's timestamp.
 - ST6 poll cadence: Trigger.ProcessingTime("3 seconds") == the reference's
-  3 s sleep; Trigger.AvailableNow for catch-up passes.
+  3 s sleep; Trigger.AvailableNow for catch-up passes. Batch bound: one
+  micro-batch is every op-log file the source lists since the previous
+  trigger (no per-trigger file cap), so a catch-up pass over a backlog is
+  one batch. The file source orders new files by modification time, not
+  by block; one file per trigger would let a later block range commit
+  first and the high-water mark then drop the earlier range as a replay.
+  Files that land in different triggers still have to arrive in block
+  order (the ST5 assumption).
 
 Scale: state tables re-written per micro-batch are the token-partitioned
 parquet layout from ``tables.write_table``; writes are staged to a scratch
@@ -69,7 +80,6 @@ from .. import schemas, tables
 from ..functions import construct_authorperm, is_main_post
 from ..processors import apply_l1_batch, apply_l2_batch
 from ..session import batch_scope
-from .stateful import vote_delta_stream
 
 HEAD_DELAY_SECONDS = 15  # reference: stream_blocks.py:82
 
@@ -466,52 +476,12 @@ class DualStreamRunner:
             touched_partitions=touched,
         )
 
-    def apply_vote_delta_batch(self, deltas: DataFrame, batch_id: int) -> None:
-        """Sink for the continuous vote-fold mode (run_l2_vote_stream, ST7):
-        one micro-batch of per-voter rshares deltas from the engine state
-        store -> per-post additive merge into posts.
-
-        The per-voter last-rshares lives INSIDE the streaming state store
-        (streaming/stateful.py), so unlike apply_votes this sink never
-        re-reads the votes table to compute deltas. Scope: this mode
-        maintains the posts.vote_rshares running totals only — the votes
-        table rows and trend/hot rescoring stay with the batch path
-        (reference semantic ST7/A6:
-        engine_comments_contract_processor.py:80-115)."""
-        if deltas.isEmpty():
-            return
-        state = self.load_state()
-        from ..operators import additive_merge
-        from .stateful import sum_vote_deltas
-
-        per_post = sum_vote_deltas(deltas).withColumnRenamed(
-            "rshares_delta", "vote_rshares"
-        )
-        # only posts that exist get the running sum (apply_votes parity)
-        per_post = per_post.join(
-            state["posts"].select("authorperm", "token"),
-            ["authorperm", "token"],
-            "left_semi",
-        ).localCheckpoint(eager=True)  # cut lineage: used for tokens AND merge
-        tokens = [r["token"] for r in per_post.select("token").distinct().collect()]
-        if not tokens:
-            return
-        out = dict(state)
-        out["posts"] = additive_merge(
-            state["posts"], per_post, ["authorperm", "token"],
-            add_cols=["vote_rshares"],
-        )
-        # this sink writes exactly one table; stage/swap only the touched
-        # token partitions of posts
-        self.save_state(out, only=["posts"], touched_partitions={"posts": tokens})
-
 
 def _file_stream(spark: SparkSession, path: str, schema) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # one op-log file ≈ one block range
-        .json(path)
-    )
+    """Op-log files as a stream. No per-trigger file cap: a trigger takes
+    every file listed since the last one, so files of one listing fold in
+    ``seq`` order whatever their modification times (ST6)."""
+    return spark.readStream.schema(schema).json(path)
 
 
 def _start(writer, trigger: dict | None, available_now: bool):
@@ -548,38 +518,5 @@ def run_l2_stream(
     stream = _file_stream(runner.spark, source_path, schemas.TXS_L2)
     writer = stream.writeStream.foreachBatch(runner.process_l2_batch).option(
         "checkpointLocation", os.path.join(runner.root, "checkpoints", "l2")
-    )
-    return _start(writer, trigger, available_now)
-
-
-def run_l2_vote_stream(
-    runner: DualStreamRunner,
-    source_path: str,
-    trigger: dict | None = None,
-    available_now: bool = False,
-    ttl: bool = False,
-):
-    """Optional continuous vote-fold mode (ST7): the same L2 tx-log files,
-    but newVote/updateVote events flow through the engine-managed
-    per-(post, voter) state (streaming/stateful.vote_delta_stream) instead
-    of the re-derive-vs-stored-votes batch fold. Per-voter deltas are
-    additive-merged into posts by apply_vote_delta_batch.
-
-    Runs on its own checkpoint (``checkpoints/l2votes``) so it can coexist
-    with — or replace — the vote half of the batch L2 stream; don't run both
-    against the same state dir or votes double-count. ``ttl=True`` arms the
-    cashout-window state expiry (processing-time trigger only — see
-    vote_delta_stream)."""
-    from ..processors.l2 import parse_l2_events, parse_vote_rows
-
-    stream = _file_stream(runner.spark, source_path, schemas.TXS_L2)
-    votes = parse_vote_rows(parse_l2_events(stream)).select(
-        "authorperm", "token", "voter", "rshares", "seq"
-    )
-    deltas = vote_delta_stream(votes, ttl=ttl)
-    writer = (
-        deltas.writeStream.foreachBatch(runner.apply_vote_delta_batch)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(runner.root, "checkpoints", "l2votes"))
     )
     return _start(writer, trigger, available_now)

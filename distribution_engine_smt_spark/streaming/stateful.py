@@ -1,38 +1,33 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Streaming twins of batch queries, built on applyInPandasWithState.
 
-The batch-first processors re-derive running aggregates per micro-batch
-against the stored state (SURVEY.md ST7); this module is the
-continuous-query alternative: per-key state lives INSIDE the streaming
-engine (RocksDB/HDFS state store at scale), so totals update without
-re-reading the posts table.
+Each twin keeps a small per-key state INSIDE the streaming engine
+(RocksDB/HDFS state store at scale) and folds each micro-batch into it,
+so a drained stream lands on the same answer as its batch query without
+re-reading history:
 
-Demonstrated on the vote running-sum (reference semantics A6: per
-(authorperm, token, voter) the LAST rshares replaces the previous one;
-the post total is the sum over voters).
+- ``zscore_stream``: per-user rolling z-score, state the user's last <= 6
+  values (twin of ``event_zscore_anomaly``).
+- ``funnel_stream``: per-user view > click > purchase stage machine,
+  state three timestamps (twin of ``event_funnel``).
+- ``kmv_sketch_stream``: per-type bottom-k hash sketch, state <= k
+  hashes (twin of ``kmv_distinct``; driven by
+  ``streaming.windows.run_kmv_stream``).
 
-Scale design — state is keyed by (authorperm, token, voter), NOT by post:
-a viral post with 1M voters becomes 1M independent, few-byte state rows
-hash-distributed across the state store, never one multi-MB JSON map
-deserialized per batch. Each key stores only the voter's last rshares and
-expires after a TTL (votes stop mattering after the cashout window —
-reference: sql/engine.sql cashout_time). The operator emits per-voter
-DELTAS; the per-post running total is a downstream additive merge exactly
-like the batch path (processors/l2.py: apply_votes' per-voter deltas,
-summed per post by the posts fold and added as additive_merge adds).
+Every fold is self-contained (nested imports, closures over plain
+values), because cloudpickle ships it by value and executors import
+nothing from this package. The engine's own state tables are not folded
+here: the L1/L2 runner (``streaming/runner.py``) is their only writer.
 """
 
 from __future__ import annotations
 
-from decimal import Decimal
 from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
-    DecimalType,
     DoubleType,
     IntegerType,
     LongType,
@@ -40,102 +35,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-DELTA_SCHEMA = StructType(
-    [
-        StructField("authorperm", StringType()),
-        StructField("token", StringType()),
-        StructField("voter", StringType()),
-        StructField("rshares_delta", DecimalType(38, 10)),
-    ]
-)
-
-# engine-managed state per (authorperm, token, voter): the voter's last
-# rshares as a string — a few bytes, never a per-post map
-STATE_SCHEMA = StructType([StructField("last_rshares", StringType())])
-
-# votes stop affecting payout after the cashout window; expire idle keys
-STATE_TTL_MS = 14 * 24 * 3600 * 1000
-
-
-def _make_vote_delta_fn(ttl: bool):
-    """Build the per-key fold, closing over the ttl flag (cloudpickle ships
-    the closure by value — executors import nothing from this repo)."""
-
-    def _emit_vote_delta(
-        key: Tuple[str, str, str],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        from decimal import Decimal as _D
-
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        rows = _pd.concat(list(batches), ignore_index=True)
-        if rows.empty:
-            return
-        # reference semantics: later (block, seq) wins per voter
-        newest = _D(str(rows.sort_values("seq")["rshares"].iloc[-1]))
-        last = _D(state.get[0]) if state.exists else _D(0)
-        state.update((str(newest),))
-        if ttl:
-            # ProcessingTimeTimeout is armed: a failure here must SURFACE —
-            # swallowing it would silently disable state expiry and let the
-            # store grow without bound (the old blanket except did exactly
-            # that)
-            state.setTimeoutDuration(14 * 24 * 3600 * 1000)
-        yield _pd.DataFrame(
-            {
-                "authorperm": [key[0]],
-                "token": [key[1]],
-                "voter": [key[2]],
-                "rshares_delta": [newest - last],
-            }
-        )
-
-    return _emit_vote_delta
-
-
-def vote_delta_stream(votes_stream: DataFrame, ttl: bool = False) -> DataFrame:
-    """votes_stream(authorperm, token, voter, rshares, seq) -> per-voter
-    rshares deltas. State = one last-rshares row per (post, voter) key;
-    hash-partitioned across the cluster state store.
-
-    ``ttl=True`` arms the cashout-window expiry (ProcessingTimeTimeout) —
-    use it on the continuous processing-time trigger. Keep the default for
-    ``availableNow`` catch-up runs: processing-time timers prevent an
-    availableNow query from ever terminating (measured; the timer batch
-    loop persists past the drained backlog)."""
-    conf = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl else GroupStateTimeout.NoTimeout
-    )
-    return votes_stream.groupBy("authorperm", "token", "voter").applyInPandasWithState(
-        _make_vote_delta_fn(ttl),
-        outputStructType=DELTA_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=conf,
-    )
-
-
-def sum_vote_deltas(deltas: DataFrame) -> DataFrame:
-    """Batch-side reduction of one micro-batch of deltas to per-post
-    adjustments — the additive_merge input shape used by the batch path."""
-    return deltas.groupBy("authorperm", "token").agg(
-        F.sum("rshares_delta").cast(DecimalType(38, 10)).alias("rshares_delta")
-    )
-
-
-def apply_vote_deltas(totals: dict, deltas_rows) -> dict:
-    """Driver-side fold helper for sinks/tests: totals[(authorperm, token)]
-    += delta, mirroring additive_merge on the posts table."""
-    for r in deltas_rows:
-        k = (r["authorperm"], r["token"])
-        totals[k] = totals.get(k, Decimal(0)) + r["rshares_delta"]
-    return totals
 
 
 # ---------------------------------------------------------------------------

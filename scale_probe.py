@@ -235,16 +235,15 @@ def _write_vote_log(path: str, n_blocks: int, votes_per_block: int,
             f.write("\n".join(_json.dumps(r) for r in rows))
 
 
-def _drain_vote_stream(spark, root: str, src: str, post_rows: int):
-    """Seed posts state, drain the continuous vote fold, return per-batch
-    trigger durations (ms) from the streaming progress log."""
+def _time_l2_batches(spark, root: str, src: str, post_rows: int):
+    """Seed posts state, then hand each block file of ``src`` to the
+    runner's L2 batch handler in block order, as perfbench's ingest loop
+    does; return the per-batch wall times (ms)."""
+    import glob
     import shutil
 
     from distribution_engine_smt_spark import schemas, tables
-    from distribution_engine_smt_spark.streaming import (
-        DualStreamRunner,
-        run_l2_vote_stream,
-    )
+    from distribution_engine_smt_spark.streaming import DualStreamRunner
 
     shutil.rmtree(root, ignore_errors=True)
     runner = DualStreamRunner(spark, root)
@@ -253,13 +252,16 @@ def _drain_vote_stream(spark, root: str, src: str, post_rows: int):
         _seed_posts_rows(post_rows), schemas.POSTS
     )
     runner.save_state(state)
-    q = run_l2_vote_stream(runner, src, available_now=True)
-    q.awaitTermination(600)
-    return [
-        p["durationMs"]["triggerExecution"]
-        for p in q.recentProgress
-        if p.get("numInputRows", 0) > 0
-    ]
+    files = sorted(
+        glob.glob(os.path.join(src, "b*.json")),
+        key=lambda p: int(os.path.basename(p)[1:-5]),
+    )
+    durs = []
+    for i, path in enumerate(files):
+        t0 = time.perf_counter()
+        runner.process_l2_batch(spark.read.schema(schemas.TXS_L2).json(path), i)
+        durs.append(round((time.perf_counter() - t0) * 1000))
+    return durs
 
 
 def probe_candidates(spark, dirs: dict[int, str]) -> dict:
@@ -309,8 +311,8 @@ _STREAM_WARMED = False
 
 def _stream_conf(spark):
     """Context: pin streaming-sized shuffle partitions + one throwaway
-    drain so JVM/codegen/state-store init isn't billed to the first
-    measured batch."""
+    L2 batch so JVM/codegen init isn't billed to the first measured
+    batch."""
     import contextlib
 
     @contextlib.contextmanager
@@ -324,7 +326,7 @@ def _stream_conf(spark):
                 if not os.path.isdir(wsrc):
                     _write_vote_log(wsrc, n_blocks=1, votes_per_block=10,
                                     post_count=100)
-                _drain_vote_stream(
+                _time_l2_batches(
                     spark, os.path.join(ROOT, "stream-warmup"), wsrc, 100
                 )
                 _STREAM_WARMED = True
@@ -336,11 +338,12 @@ def _stream_conf(spark):
 
 
 def probe_ingest(spark) -> dict:
-    """Ingest scaling (VERDICT r6 #4): drain a FIXED vote-tx log through
-    the continuous vote fold against 1x/3x/10x posts state. The delta
-    touches one token partition of ten, so per-batch cost should track
-    the touched partition (~state/10), NOT the full state rewrite —
-    the partition-scoped save_state claim (tables.py merge path)."""
+    """Ingest scaling (VERDICT r6 #4): replay a FIXED vote-tx log through
+    the runner's L2 batch handler, one batch per block file, against
+    1x/3x/10x posts state. The votes touch one token partition of ten, so
+    per-batch cost should track the touched partition (~state/10), NOT
+    the full state rewrite — the partition-scoped save_state claim
+    (tables.py merge path)."""
     base_posts = 4000
     src = os.path.join(ROOT, "ingest-txs")
     if not os.path.isdir(src):
@@ -350,22 +353,21 @@ def probe_ingest(spark) -> dict:
     with _stream_conf(spark):
         for m in SCALES:
             root = os.path.join(ROOT, f"ingest-x{m}")
-            durs = _drain_vote_stream(spark, root, src, base_posts * m)
+            durs = _time_l2_batches(spark, root, src, base_posts * m)
             out[str(m)] = {
                 "posts_rows": base_posts * m,
+                "cores": spark.sparkContext.defaultParallelism,
                 "batch_ms": _percentiles(durs),
             }
             print(json.dumps({"ingest_scale": m, **out[str(m)]}))
     return out
 
 
-def probe_streaming(spark) -> dict:
-    """Micro-batch latency at 1x/10x OP-RATE (VERDICT r6 #7) for the two
-    continuous operators: the L2 vote fold and the incremental pair
-    store. The reference cadence is one block every 3 s (BASELINE.md) —
-    p95 per micro-batch must sit comfortably under that."""
+def probe_vote_rate(spark) -> dict:
+    """L2 batch latency at 1x/10x vote rate: 60 vs 600 votes per block
+    through the runner's L2 batch handler against fixed 4k-post state.
+    The reference cadence is one block every 3 s (BASELINE.md)."""
     out: dict[str, dict] = {}
-    # --- vote fold: votes-per-block 60 (1x) vs 600 (10x), fixed state
     with _stream_conf(spark):
         for rate, vpb in (("1", 60), ("10", 600)):
             src = os.path.join(ROOT, f"stream-txs-r{rate}")
@@ -373,11 +375,24 @@ def probe_streaming(spark) -> dict:
                 _write_vote_log(src, n_blocks=5, votes_per_block=vpb,
                                 post_count=4000)
             root = os.path.join(ROOT, f"stream-votes-r{rate}")
-            durs = _drain_vote_stream(spark, root, src, 4000)
-            out[f"l2_vote_stream_rate_{rate}x"] = {
-                "votes_per_block": vpb, "batch_ms": _percentiles(durs),
+            durs = _time_l2_batches(spark, root, src, 4000)
+            key = f"l2_batch_votes_rate_{rate}x"
+            out[key] = {
+                "votes_per_block": vpb,
+                "cores": spark.sparkContext.defaultParallelism,
+                "batch_ms": _percentiles(durs),
             }
-            print(json.dumps({"stream": f"votes_{rate}x", **out[f"l2_vote_stream_rate_{rate}x"]}))
+            print(json.dumps({"stream": f"votes_{rate}x", **out[key]}))
+    return out
+
+
+def probe_streaming(spark) -> dict:
+    """Micro-batch latency at 1x/10x OP-RATE (VERDICT r6 #7): the runner's
+    L2 vote batches (``probe_vote_rate``), then the incremental pair store
+    and the IVF-PQ ingest stream. The reference cadence is one block every
+    3 s (BASELINE.md) — p95 per micro-batch must sit comfortably under
+    that."""
+    out = probe_vote_rate(spark)
     # --- pair store: docs-per-wave 30 (1x) vs 300 (10x) against the
     # sf0.1 corpus index; waves drained one at a time (wall per wave)
     import shutil

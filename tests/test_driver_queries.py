@@ -58,76 +58,3 @@ def test_query_matches_oracle(spark, con, name):
         pytest.skip(f"{name}: no oracle (rows-only check)")
     problems = compare(df, ORACLE_SQL[name], con)
     assert not problems, f"{name}: {problems}"
-
-
-def test_round_modified_queries_inside_driver_cap():
-    """Rotation policy (standing rule): queries whose implementation changed
-    this round must sit inside the driver's 50-query oracle cap, and must
-    not simultaneously be in the rotated-past-the-cap set. Driven from the
-    declared _ROUND_MODIFIED list in __spark_entry__.py."""
-    import __spark_entry__ as e
-
-    names = list(e.queries())
-    top50 = set(names[:50])
-    missing = [n for n in e._ROUND_MODIFIED if n not in top50]
-    assert not missing, f"round-modified queries outside the driver cap: {missing}"
-    overlap = set(e._ROUND_MODIFIED) & set(e._DRIVER_ROTATE_LAST)
-    assert not overlap, f"round-modified queries rotated past the cap: {overlap}"
-    # sanity: every declared name is a real query
-    unknown = [
-        n for n in e._ROUND_MODIFIED + e._DRIVER_ROTATE_LAST + e._DRIVER_PRIORITY
-        if n not in names
-    ]
-    assert not unknown, f"declared rotation names not in queries(): {unknown}"
-    # the cut must be explicit: everything NOT rotated out fits the cap, so
-    # adding a query forces a deliberate rotation choice here
-    n_inside = len(names) - len(e._DRIVER_ROTATE_LAST)
-    assert n_inside <= 50, (
-        f"{n_inside} queries inside the 50-query driver cap; extend "
-        "_DRIVER_ROTATE_LAST with stable multi-round-green queries"
-    )
-
-
-def test_no_query_starves_without_driver_rows():
-    """Coverage-telemetry invariant (VERDICT r4 #8): any registered query
-    with ZERO driver oracle rows across every recorded CORRECTNESS_r*.json
-    must sit inside the current top-50, so it receives a row next round
-    instead of accruing rotation debt. Skips cleanly before the first
-    driver round."""
-    import glob
-    import json
-    import os
-
-    import __spark_entry__ as e
-
-    root = os.path.dirname(os.path.abspath(e.__file__))
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    if not files:
-        pytest.skip("no driver CORRECTNESS records yet")
-    seen: set[str] = set()
-    for f in files:
-        with open(f) as fh:
-            seen |= set(json.load(fh))
-    names = list(e.queries())
-    starved = [n for n in names[50:] if n not in seen]
-    assert not starved, (
-        "queries with zero driver rows rotated past the 50-slot cap "
-        f"(would never get driver verification): {starved}"
-    )
-
-
-def test_rotation_lists_are_disjoint():
-    """ADVICE r11 #3: a name in both _DRIVER_PRIORITY and
-    _DRIVER_ROTATE_LAST is emitted twice by _ordered() (only dict
-    dedupe in queries() hides it) and double-counts in the cap math —
-    the three rotation lists must be pairwise disjoint."""
-    import __spark_entry__ as e
-
-    assert not set(e._DRIVER_PRIORITY) & set(e._DRIVER_ROTATE_LAST)
-    assert not set(e._ROUND_MODIFIED) & set(e._DRIVER_ROTATE_LAST)
-    # priority/modified may legitimately overlap only if a head query
-    # was also modified — but each name must appear once in _ordered()
-    names = list(e.queries())
-    assert len(names) == len(set(names))
-    ordered = e._ordered(names)
-    assert len(ordered) == len(set(ordered)) == len(names)

@@ -16,7 +16,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 
 import pytest
 
@@ -73,50 +72,37 @@ def test_local_artifact_schema_and_coverage():
     assert not weak, f"oracle exists but artifact recorded no_oracle: {weak}"
 
 
-def _driver_green_rounds() -> tuple[int, dict[str, int]]:
-    """(max recorded round, {query: latest driver-green round})."""
-    latest: dict[str, int] = {}
-    max_round = 0
-    for f in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        max_round = max(max_round, rnd)
-        with open(f) as fh:
-            for q, rec in json.load(fh).items():
-                green = rec.get("hash_match") or (
-                    rec.get("rows_match") and rec.get("err") is None
-                )
-                if green:
-                    latest[q] = max(latest.get(q, 0), rnd)
-    return max_round, latest
-
-
 def test_rotation_keeps_driver_evidence_fresh():
-    """Standing invariant: no registered query's driver evidence may age
-    past MAX_EVIDENCE_AGE rounds. A query last green at round L has age
-    R+1-L after the NEXT driver round R+1; if that exceeds the bound and
-    the query is not in the current top-50 head, the rotation has failed
-    it. (Zero-row queries are covered by the no-starve test.)"""
+    """queries() emits every registered query exactly once, and the
+    driver's 50-query head holds every _ROUND_MODIFIED name, every query
+    with no driver record (so it gets one next round instead of accruing
+    rotation debt), and every query whose driver evidence would age past
+    MAX_EVIDENCE_AGE rounds after the next driver round. A query last green
+    at round L has age R+1-L after round R+1."""
     import __spark_entry__ as e
 
-    max_round, latest = _driver_green_rounds()
+    ordered = e._ordered(list(QUERIES))
+    assert sorted(ordered) == sorted(QUERIES), "each query must appear exactly once"
+    names = list(e.queries())
+    assert names == ordered
+    assert list(e.oracle_sql()) == [n for n in ordered if n in ORACLE_SQL]
+    unknown = sorted(set(e._ROUND_MODIFIED) - set(QUERIES))
+    assert not unknown, f"_ROUND_MODIFIED names not in the registry: {unknown}"
+
+    max_round, recorded, green = e._driver_evidence()
     if max_round == 0:
         pytest.skip("no driver CORRECTNESS records yet")
-    head = set(list(e.queries())[:50])
-    next_round = max_round + 1
-    overdue = sorted(
-        q
-        for q, last in latest.items()
-        if q in QUERIES
-        and next_round - last > MAX_EVIDENCE_AGE
-        and q not in head
-    )
-    assert not overdue, (
-        f"driver evidence would age past {MAX_EVIDENCE_AGE} rounds for "
-        f"queries outside the driver head: {overdue}"
-    )
+    head = set(names[:50])
+    must_lead = {
+        "round-modified": set(e._ROUND_MODIFIED),
+        "never recorded": set(QUERIES) - recorded,
+        f"evidence older than {MAX_EVIDENCE_AGE} rounds": {
+            q for q in set(QUERIES) & recorded
+            if max_round + 1 - green.get(q, 0) > MAX_EVIDENCE_AGE
+        },
+    }
+    outside = {why: sorted(qs - head) for why, qs in must_lead.items() if qs - head}
+    assert not outside, f"queries outside the 50-query driver head: {outside}"
 
 
 def test_only_rejects_unknown_query_names(capsys):
