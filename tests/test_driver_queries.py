@@ -58,3 +58,61 @@ def test_query_matches_oracle(spark, con, name):
         pytest.skip(f"{name}: no oracle (rows-only check)")
     problems = compare(df, ORACLE_SQL[name], con)
     assert not problems, f"{name}: {problems}"
+
+
+def test_round_modified_queries_inside_driver_cap():
+    """Rotation policy: every _ROUND_MODIFIED name is a registered query,
+    is declared once, and sits inside the driver's 50-query oracle cap."""
+    import __spark_entry__ as e
+
+    names = list(e.queries())
+    unknown = [n for n in e._ROUND_MODIFIED if n not in names]
+    assert not unknown, f"_ROUND_MODIFIED names not in queries(): {unknown}"
+    assert len(e._ROUND_MODIFIED) == len(set(e._ROUND_MODIFIED))
+    assert len(e._ROUND_MODIFIED) <= 50, "more round-modified queries than the cap"
+    top50 = set(names[:50])
+    missing = [n for n in e._ROUND_MODIFIED if n not in top50]
+    assert not missing, f"round-modified queries outside the driver cap: {missing}"
+
+
+def test_no_query_starves_without_driver_rows():
+    """Any registered query with no driver record in any committed
+    CORRECTNESS_r*.json sits inside the top-50, so it gets a row next
+    round instead of accruing rotation debt. Skips before the first
+    driver round."""
+    import glob
+    import json
+    import os
+
+    import __spark_entry__ as e
+
+    root = os.path.dirname(os.path.abspath(e.__file__))
+    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
+    if not files:
+        pytest.skip("no driver CORRECTNESS records yet")
+    seen: set[str] = set()
+    for f in files:
+        with open(f) as fh:
+            seen |= set(json.load(fh))
+    names = list(e.queries())
+    starved = [n for n in names[50:] if n not in seen]
+    assert not starved, (
+        "queries with zero driver rows rotated past the 50-slot cap "
+        f"(would never get driver verification): {starved}"
+    )
+
+
+def test_rotation_lists_are_disjoint():
+    """The computed rotation emits every registered query exactly once:
+    a _ROUND_MODIFIED name leads the head and is not emitted again among
+    the evidence-ordered rest."""
+    import __spark_entry__ as e
+
+    names = list(QUERIES)
+    ordered = e._ordered(names)
+    assert len(ordered) == len(set(ordered)) == len(names)
+    assert sorted(ordered) == sorted(names)
+    head = [n for n in e._ROUND_MODIFIED if n in names]
+    assert ordered[: len(head)] == head
+    assert not set(head) & set(ordered[len(head):])
+    assert list(e.queries()) == ordered
